@@ -936,8 +936,9 @@ def grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: exact `percentile` buffers each group's values in the agg
     state, so it is the ORACLE-parity surface (bounded groups). At 10^12
     rows per group the engine path is the mergeable sketch pair —
-    percentile_approx (quantile_sketch entry) or the persisted t-digests
-    (profiling/tdigest.py) — which trade exactness for O(sketch) state."""
+    percentile_approx (quantile_sketch entry) or the persisted KLL sketches
+    (ValidationRun.global_quantiles) — which trade exactness for O(sketch)
+    state."""
     ev = T(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.count("value").alias("n_value"),

@@ -433,10 +433,15 @@ def frame_sample(
                     idxs = np.unique(
                         np.linspace(0, n - 1, min(n_samples, n)).round().astype(int)
                     )
-                    for i in idxs:
-                        emit(mid, int(i), enc(frames[i], image_fmt), image_fmt, None)
+                    # buffered: a clip yields its frame rows or its error row,
+                    # never both (a later frame's encoder failure drops the
+                    # frames already encoded)
+                    encoded = [(int(i), enc(frames[i], image_fmt)) for i in idxs]
                 except Exception as e:  # noqa: BLE001 — violation-row contract
                     emit(mid, None, None, image_fmt, f"{type(e).__name__}: {e}")
+                    continue
+                for i, frame in encoded:
+                    emit(mid, i, frame, image_fmt, None)
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
 
     return media.select("media_id", "payload", "fmt").mapInPandas(

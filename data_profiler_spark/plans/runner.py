@@ -13,10 +13,15 @@ Dataflow (all checks share ONE decode pass and ONE persisted stats frame):
 
     clips ──filter(pending partitions)──► decode_stats (mapInArrow,
           map-side: bytes never shuffled) ──► salt_repartition(stats) [persist]
-          ├─► constraint violations (union of anti-joins/filters)
-          ├─► per-partition column profile (single fused agg)
-          ├─► dur_ms histogram → PSI/KS vs baseline snapshot
-          └─► verdicts (checks × partitions grid vs violation counts)
+          │   (meanwhile a pool thread reads the drift baseline)
+          ├─► violations: row-level checks ∪ per-key counts (uniqueness and
+          │   both referential directions from ONE groupBy over clip ids
+          │   tagged by side) [persist] → append, count per check×partition
+          ├─► profile: ONE groupBy(partition_id) agg — row count, column
+          │   profile, KLL sketch per SKETCH_COLUMNS column
+          └─► drift: histograms binned with the baseline's edges → PSI/KS
+    then verdicts (checks × partitions grid, built driver-side), profile,
+    sketches and drift appended concurrently; the manifest commit is last.
 
 Key scale property: duplicate keys hash to the same partition_id
 (pmod(xxhash64(key), n)), so per-partition uniqueness verdicts are exact
@@ -27,23 +32,17 @@ partition completed.
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from data_profiler_spark.audio import decode_stats, salt_repartition
-from data_profiler_spark.checks import (
-    check_referential,
-    check_unique,
-    with_partition_id,
-)
+from data_profiler_spark.checks import with_partition_id
 from data_profiler_spark.checks.constraints import row_level_violations
 from data_profiler_spark.drift import drift_from_hist_rows
 from data_profiler_spark.functions.frames import local_frame
@@ -54,16 +53,24 @@ from data_profiler_spark.profiling import (
     histogram,
     histograms_multi,
 )
-from data_profiler_spark.profiling.tdigest import merge_sketch_rows, sketch_by_group
 from data_profiler_spark.schemas import VERDICT_SCHEMA, VIOLATION_SCHEMA
 from data_profiler_spark.sources.tableio import TableIO
 
 PROFILE_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
 STATS_PROFILE_COLUMNS = ["decoded_ms", "rms", "peak", "clip_ratio", "zero_cross_rate"]
-# Columns that persist a mergeable t-digest per partition: table-level
-# quantiles across partitions profiled by DIFFERENT (resumed) runs come
-# from merging stored sketches, never from re-reading completed partitions.
+# Columns that persist a mergeable KLL quantile sketch per partition (Spark's
+# kll_sketch_agg_double, computed inside the profile aggregation): quantiles
+# across partitions profiled by DIFFERENT (resumed) runs come from one
+# kll_merge_agg_double over the stored sketches, never from re-reading
+# completed partitions.
 SKETCH_COLUMNS = ["dur_ms", "decoded_ms", "rms"]
+# KLL accuracy parameter. DataSketches' a-priori bound for a single quantile
+# query, 2.296 / k**0.9723, is a normalized rank error of 1.33% at k = 200
+# with 99% confidence, whatever the row count and however the sketches were
+# split and merged. A sketch holds at most a few KB.
+KLL_K = 200
+KLL_RANK_ERROR = 0.0133
+PROFILE_DDL = "partition_id int, column string, metric string, value double"
 DUR_HIST_BINS = 40
 # Numeric profile columns the drift gate scores (PSI + binned-KS per
 # column vs the baseline snapshot). dur_ms is declared metadata; decoded_ms
@@ -89,6 +96,9 @@ class RunResult:
     clips_per_sec: float
     wall_sec: float
     all_passed: bool = True
+    # seconds per phase of run(), summing to wall_sec: manifest_read, decode,
+    # baseline (snapshot_baseline runs only), tail, writes, commit
+    phases: dict[str, float] = field(default_factory=dict)
 
 
 class ValidationRun:
@@ -147,41 +157,53 @@ class ValidationRun:
     def global_quantiles(self, column: str, qs: list[float]) -> dict[float, float]:
         """Table-level quantiles of ``column`` across ALL partitions in the
         sketches table — including partitions profiled by earlier (resumed)
-        runs. Pure driver-side sketch merge; nothing is re-read or re-decoded.
-        Reads through the committed-snapshot filter (module contract): a run
-        that crashed after job_sketches appended but before the manifest
-        commit must not double-weight its orphan partitions."""
-        rows = (
-            self.read_committed("sketches")
-            .filter(F.col("column") == column)
-            .collect()
-        )
-        digest = merge_sketch_rows(rows, column=column)
-        return {q: digest.quantile(q) for q in qs}
+        runs — from :meth:`global_quantiles_frame`. NaN when the column has
+        no committed sketch rows."""
+        got = {
+            r["quantile"]: r["value"]
+            for r in self.global_quantiles_frame(tuple(qs), [column]).collect()
+        }
+        return {q: got.get(float(q), float("nan")) for q in qs}
 
     def global_quantiles_frame(
         self,
         qs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.99),
         columns: list[str] | None = None,
     ) -> DataFrame:
-        """:meth:`global_quantiles` for every sketch column, as one report
-        frame (column, quantile, value) — the shape the html/xlsx sinks
-        take. ONE collect of the (metadata-sized) committed sketch table
-        covers all columns; columns with no committed sketches are omitted
-        rather than reported as zeros."""
-        cols = columns or SKETCH_COLUMNS
-        sketch_rows = (
+        """Merged-sketch quantiles for every sketch column as one report frame
+        (column, quantile, value) — the shape the html/xlsx sinks take.
+
+        One Spark aggregation over the committed sketch rows: the per-partition
+        KLL sketches merge per column (kll_merge_agg_double) and each merged
+        sketch answers every quantile in one call; nothing is merged on the
+        driver. Reads through the committed-snapshot filter (module contract):
+        a run that crashed after appending its sketches but before the
+        manifest commit must not double-weight its orphan partitions. Columns
+        with no committed rows (or only empty sketches) are omitted rather
+        than reported as zeros. Each value's rank is within ``KLL_RANK_ERROR``
+        of its quantile (99% confidence)."""
+        qarr = F.array(*[F.lit(float(q)) for q in qs])
+        merged = (
             self.read_committed("sketches")
-            .filter(F.col("column").isin(list(cols)))
-            .collect()
+            .filter(F.col("column").isin(list(columns or SKETCH_COLUMNS)))
+            .groupBy("column")
+            .agg(F.kll_merge_agg_double("sketch").alias("merged"))
+            # an empty sketch has no quantiles (the call raises), so drop it
+            # before asking
+            .filter(F.kll_sketch_get_n_double("merged") > 0)
         )
-        out_rows: list[tuple] = []
-        for c in cols:
-            digest = merge_sketch_rows(sketch_rows, column=c)
-            if digest.n > 0:
-                out_rows += [(c, float(q), float(digest.quantile(q))) for q in qs]
-        return local_frame(
-            self.spark, out_rows, "column string, quantile double, value double"
+        return (
+            merged.select(
+                "column",
+                F.explode(
+                    F.arrays_zip(
+                        qarr.alias("quantile"),
+                        F.kll_sketch_get_quantile_double("merged", qarr).alias("value"),
+                    )
+                ).alias("q"),
+            )
+            .select("column", "q.quantile", "q.value")
+            .orderBy("column", "quantile")
         )
 
     # -- baseline snapshot ---------------------------------------------------
@@ -274,15 +296,15 @@ class ValidationRun:
         run's own drift scores compare it against itself (≈0, all passing)
         — the bootstrap shape for a first run on clean data.
         """
-        t0 = time.monotonic()
-        verbose = os.environ.get("DPS_VERBOSE_TIMING") == "1"
-        last = [t0]
+        t0 = last = time.monotonic()
+        phases: dict[str, float] = {}
 
-        def mark(label: str) -> None:
-            if verbose:
-                now = time.monotonic()
-                print(f"  [timing] {label}: {now - last[0]:.1f}s", file=sys.stderr)
-                last[0] = now
+        def phase(name: str) -> None:
+            """Close phase ``name``: it ran from the previous phase's end."""
+            nonlocal last
+            now = time.monotonic()
+            phases[name] = now - last
+            last = now
 
         clips = with_partition_id(clips, self.n_partitions)
 
@@ -290,12 +312,13 @@ class ValidationRun:
         pending = sorted(set(range(self.n_partitions)) - done)
         if limit_partitions is not None:
             pending = pending[:limit_partitions]
-        mark("manifest read")
+        phase("manifest_read")
         if not pending:
             empty_v = self.spark.createDataFrame([], VIOLATION_SCHEMA)
             empty_verd = self.spark.createDataFrame([], VERDICT_SCHEMA)
-            empty_prof = self.spark.createDataFrame([], "partition_id int, column string, metric string, value double")
-            return RunResult("", [], 0, empty_verd, empty_v, empty_prof, None, 0.0, 0.0)
+            empty_prof = self.spark.createDataFrame([], PROFILE_DDL)
+            return RunResult("", [], 0, empty_verd, empty_v, empty_prof, None, 0.0,
+                             time.monotonic() - t0, phases=phases)
 
         # At 10^12 scale partition_id is the Iceberg partition column and this
         # filter is partition pruning; locally it's a pushed-down predicate.
@@ -319,288 +342,298 @@ class ValidationRun:
         )
         if self.salt_mode == "stats":
             stats = salt_repartition(stats, width)
-        # Materialize the cache BEFORE fanning out: the violation union scans
-        # stats from several branches of ONE job, and branches racing an
-        # unpopulated cache each re-run the decode (4× the dominant cost).
-        stats.persist(StorageLevel.MEMORY_AND_DISK).count()
-        if transcripts is not None:
-            transcripts = transcripts.persist(StorageLevel.MEMORY_AND_DISK)
-            transcripts.count()
 
-        mark("decode+persist")
-        # The whole post-persist tail runs under try/finally: any
-        # raising path (a failed tail job, the baseline_id mismatch
-        # guard, a sink write) must not leak the MEMORY_AND_DISK
-        # stats/transcripts caches into the rest of the session. The
-        # violations cache DELIBERATELY outlives a successful run (it is
-        # returned in RunResult and read by callers), so it is dropped on
-        # the except path only.
-        _viol_cache = None
+        # Everything after the decode runs under try/finally: any raising path
+        # (a failed tail job, the baseline_id mismatch guard, a sink write)
+        # must not leak the MEMORY_AND_DISK stats cache into the rest of the
+        # session. The violations cache DELIBERATELY outlives a successful run
+        # (it is returned in RunResult and read by callers), so it is dropped
+        # on the except path only. The pool is left (every submitted job
+        # finished) before either cache is dropped: a job still scanning a
+        # dropped cache would silently re-run the decode.
+        violations = None
         try:
-            if snapshot_baseline:
-                # BEFORE the parallel tail: job_drift reads baseline_hist/
-                # baseline_meta, and overwriting them concurrently from this
-                # thread would race the read (FILE_NOT_EXIST mid-scan).
-                self.write_baseline(None, stats=stats)
-                mark("baseline snapshot (shared decode)")
-            # -- constraint checks (names drive the verdict grid) ----------------
-            # Row-level checks fuse into ONE scan of stats (no joins); only
-            # uniqueness (groupBy) and the two referential directions (anti-joins)
-            # add exchanges. Minimizing job/stage count matters at both ends of
-            # the scale: locally each job has fixed overhead, on a cluster each
-            # pass over 10^12 rows is the cost unit.
-            n = self.n_partitions
-            key = F.col("clip_id")
-            row_specs = [
-                (
-                    "pk_not_null",
-                    key.isNull() | (F.trim(key) == ""),
-                    F.lit("null or empty primary key"),
-                ),
-                (
-                    "audio_decodable",
-                    ~F.col("decode_ok"),
-                    F.coalesce(F.col("decode_err"), F.lit("decode failed")),
-                ),
-                (
-                    "dur_ms_consistent",
-                    F.col("decode_ok")
-                    & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > self.dur_tol_ms),
-                    F.concat(
-                        F.lit("declared dur_ms="),
-                        F.col("dur_ms").cast("string"),
-                        F.lit(" decoded_ms="),
-                        F.round("decoded_ms", 1).cast("string"),
-                    ),
-                ),
-                (
-                    "transcript_not_null",
-                    F.col("transcript").isNull() | (F.trim(F.col("transcript")) == ""),
-                    F.lit("null or empty transcript"),
-                ),
-            ]
-            check_names = [s[0] for s in row_specs] + ["pk_unique"]
-            branches = [
-                row_level_violations(stats, row_specs),
-                check_unique(stats, n_partitions=n),
-            ]
-            if transcripts is not None:
-                check_names += ["clip_has_transcript", "transcript_has_clip"]
-                branches.append(
-                    check_referential(stats, transcripts, key="clip_id",
-                                      name="clip_has_transcript",
-                                      detail="clip has no transcript row",
-                                      n_partitions=n))
-                branches.append(
-                    check_referential(transcripts, stats, key="clip_id",
-                                      name="transcript_has_clip",
-                                      detail="transcript row has no clip",
-                                      n_partitions=n))
-            all_violations = branches[0]
-            for v in branches[1:]:
-                all_violations = all_violations.unionByName(v)
-            all_violations = all_violations.persist(StorageLevel.MEMORY_AND_DISK)
-            _viol_cache = all_violations
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                # The drift baseline is metadata-sized; read it while the
+                # decode runs. A run that snapshots its own baseline reads it
+                # after writing it instead.
+                baseline = None if snapshot_baseline else pool.submit(self._read_baseline)
+                # Materialize the cache BEFORE fanning out: tail jobs racing an
+                # unpopulated cache would each re-run the decode.
+                stats.persist(StorageLevel.MEMORY_AND_DISK).count()
+                phase("decode")
+                if snapshot_baseline:
+                    self.write_baseline(None, stats=stats)
+                    baseline = pool.submit(self._read_baseline)
+                    phase("baseline")
 
-            # -- commit outputs, then the manifest (crash-safe ordering): every
-            # output row carries this run's snapshot id; a crash before the
-            # manifest commit leaves orphan rows that reads filter out by
-            # joining on manifest snapshot ids.
-            snap = uuid.uuid4().hex[:16]
-            tag = F.lit(snap).alias("snapshot_id")
+                check_names, violations = self._violations(stats, transcripts)
+                violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
 
-            # The post-decode tail is several INDEPENDENT jobs over the same
-            # persisted stats cache (violations, per-partition totals, profile
-            # agg, drift histogram). Run them concurrently from driver threads —
-            # Spark schedules concurrent jobs fine, idle cores pick up the next
-            # job's tasks — instead of serializing ~5 small jobs' full latency.
-            # The verdict grid (explicit PASS rows for clean partitions,
-            # DataFiles.py:52-77 semantics) is assembled driver-side: it is
-            # |checks|×|partitions| rows of metadata, and building it as a
-            # crossJoin+left-join DAG costs more in planning than the data is
-            # worth at any scale.
-            def job_violations():
-                # write first (fills the cache), then count off the cache
-                self.io.append(all_violations.select(tag, "*"), "violations")
-                return {
-                    (r["check_name"], r["partition_id"]): r["n"]
-                    for r in all_violations.groupBy("check_name", "partition_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
+                # Every output row carries this run's snapshot id; a crash
+                # before the manifest commit leaves orphan rows that reads
+                # filter out by joining on manifest snapshot ids.
+                snap = uuid.uuid4().hex[:16]
+                tag = F.lit(snap).alias("snapshot_id")
 
-            def job_totals():
-                return (
-                    stats.groupBy("partition_id")
-                    .agg(F.count(F.lit(1)).alias("rows_checked"))
-                    .collect()
-                )
-
-            def job_profile():
-                # whole per-partition profile as ONE fused wide agg over stats
-                # (clip scalars + decoded-audio metrics together), melted
-                # driver-side.
-                return column_profile_collected(
-                    stats,
-                    PROFILE_COLUMNS + STATS_PROFILE_COLUMNS,
-                    group_cols=["partition_id"],
-                )
-
-            def job_drift():
-                # Per-column histograms vs baseline → PSI + binned-KS per
-                # DRIFT_COLUMNS column. Current histograms are binned with the
-                # BASELINE's persisted edges (baseline_meta) — all columns in one
-                # scan of the stats cache. The histogram aggregations run
-                # distributed; the comparison is ≤ nbins+2 rows per column, so it
-                # is computed driver-side (drift_from_hist_rows) instead of as
-                # two join DAGs. Pre-meta baselines (dur_ms only, fixed edges)
-                # keep working via the legacy fallback.
-                if not self.io.exists(self.spark, "baseline_hist"):
-                    return None
-                base_rows = self.io.read(self.spark, "baseline_hist").collect()
-                if self.io.exists(self.spark, "baseline_meta"):
-                    meta_rows = self.io.read(self.spark, "baseline_meta").collect()
-                    hist_ids = {
-                        r["baseline_id"]
-                        for r in base_rows
-                        if "baseline_id" in r.__fields__
+                # The tail is three INDEPENDENT jobs over the persisted stats
+                # cache, run concurrently from driver threads: Spark schedules
+                # concurrent jobs fine and idle cores pick up the next job's
+                # tasks, instead of serializing each small job's full latency.
+                def job_violations():
+                    # write first (fills the cache), then count off the cache
+                    self.io.append(violations.select(tag, "*"), "violations")
+                    return {
+                        (r["check_name"], r["partition_id"]): r["n"]
+                        for r in violations.groupBy("check_name", "partition_id")
+                        .agg(F.count(F.lit(1)).alias("n"))
+                        .collect()
                     }
-                    meta_ids = {
-                        r["baseline_id"]
-                        for r in meta_rows
-                        if "baseline_id" in r.__fields__
-                    }
-                    # ANY asymmetry is a mismatch — including one table stamped
-                    # and the other pre-stamping-era (a new-code write_baseline
-                    # that crashed after meta left exactly that state).
-                    if (hist_ids or meta_ids) and hist_ids != meta_ids:
-                        raise RuntimeError(
-                            "baseline_hist/baseline_meta carry different baseline_ids "
-                            f"({hist_ids or '{legacy}'} vs {meta_ids or '{legacy}'}) — "
-                            "write_baseline crashed between its two table writes; "
-                            "re-run write_baseline"
-                        )
-                    specs = {
-                        r["column"]: (r["lo"], r["hi"], r["nbins"])
-                        for r in meta_rows
-                        if r["nbins"] > 0
-                    }
-                    cur = histograms_multi(stats, specs)
-                    for r in meta_rows:
-                        if r["nbins"] == 0:  # categorical (stable-hash buckets)
-                            cur = cur.unionByName(categorical_histogram(stats, r["column"]))
-                    cur_rows = cur.collect()
-                else:
-                    cur_rows = histogram(
-                        stats, "dur_ms", lo=0.0, hi=16000.0, nbins=DUR_HIST_BINS
-                    ).collect()
-                return [
-                    {
-                        **d,
-                        "psi_passed": d["psi"] <= self.psi_threshold,
-                        "ks_passed": d["ks_d"] <= self.ks_threshold,
-                    }
-                    for d in drift_from_hist_rows(cur_rows, base_rows)
-                ]
 
-            def job_sketches():
-                # mergeable per-partition quantile sketches (profiling/tdigest)
-                self.io.append(
-                    sketch_by_group(stats, SKETCH_COLUMNS).select(tag, "*"), "sketches"
-                )
+                def job_profile():
+                    # per-partition row count, column profile (clip scalars +
+                    # decoded-audio metrics) and quantile sketches as ONE
+                    # groupBy(partition_id) agg, melted driver-side
+                    return column_profile_collected(
+                        stats,
+                        PROFILE_COLUMNS + STATS_PROFILE_COLUMNS,
+                        group_cols=["partition_id"],
+                        extra_aggs={
+                            f"{c}__kll": F.kll_sketch_agg_double(F.col(c).cast("double"), KLL_K)
+                            for c in SKETCH_COLUMNS
+                        },
+                    )
 
-            with ThreadPoolExecutor(max_workers=5) as pool:
+                def job_drift():
+                    return self._drift(stats, baseline.result())
+
                 f_counts = pool.submit(job_violations)
-                f_totals = pool.submit(job_totals)
                 f_prof = pool.submit(job_profile)
                 f_drift = pool.submit(job_drift)
-                f_sketch = pool.submit(job_sketches)
                 counts = f_counts.result()
-                totals_rows = f_totals.result()
-                prof_rows = f_prof.result()
+                prof_rows, groups = f_prof.result()
                 drift_rows = f_drift.result()
-                f_sketch.result()
-            mark("parallel tail (violations+totals+profile+drift+sketches)")
+                phase("tail")
 
-            verdict_rows = [
-                {
-                    "check_name": c,
-                    "partition_id": t["partition_id"],
-                    "passed": counts.get((c, t["partition_id"]), 0) == 0,
-                    "violation_count": int(counts.get((c, t["partition_id"]), 0)),
-                    "rows_checked": int(t["rows_checked"]),
-                    "detail": None,
-                }
-                for c in check_names
-                for t in totals_rows
-            ]
-            # local_frame (Arrow path): a plain createDataFrame of Python rows
-            # is RDD-backed and re-enters Python workers on every write (~4s per
-            # tiny metadata write measured on this sandbox).
-            verdict_df = local_frame(self.spark, verdict_rows, VERDICT_SCHEMA)
-            self.io.append(verdict_df.coalesce(1).select(tag, "*"), "verdicts")
-            mark("verdict write")
-
-            profile = local_frame(
-                self.spark, prof_rows, "partition_id int, column string, metric string, value double"
-            )
-            self.io.append(profile.coalesce(1).select(tag, "*"), "profile")
-            mark("profile write")
-
-            drift = None
-            if drift_rows is not None:
-                drift = local_frame(
-                    self.spark, drift_rows,
-                    "column string, psi double, ks_d double, psi_passed boolean, ks_passed boolean",
+                # The verdict grid (explicit PASS rows for clean partitions,
+                # DataFiles.py:52-77 semantics) is assembled driver-side: it
+                # is |checks|×|partitions| rows of metadata, and building it
+                # as a crossJoin+left-join DAG costs more in planning than the
+                # data is worth at any scale.
+                verdict_rows = [
+                    {
+                        "check_name": c,
+                        "partition_id": g["partition_id"],
+                        "passed": counts.get((c, g["partition_id"]), 0) == 0,
+                        "violation_count": int(counts.get((c, g["partition_id"]), 0)),
+                        "rows_checked": int(g["rows"]),
+                        "detail": None,
+                    }
+                    for c in check_names
+                    for g in groups
+                ]
+                # local_frame (Arrow path): a plain createDataFrame of Python
+                # rows is RDD-backed and re-enters Python workers on every
+                # write (~4s per tiny metadata write measured on this sandbox).
+                verdict_df = local_frame(self.spark, verdict_rows, VERDICT_SCHEMA)
+                profile = local_frame(self.spark, prof_rows, PROFILE_DDL)
+                sketches = local_frame(
+                    self.spark,
+                    [(g["partition_id"], c, g[f"{c}__kll"]) for g in groups for c in SKETCH_COLUMNS],
+                    "partition_id int, column string, sketch binary",
                 )
-                self.io.append(drift.coalesce(1).select(tag, "*"), "drift")
-            mark("drift")
-            per_part: dict[int, int] = {}
+                outputs = {"verdicts": verdict_df, "profile": profile, "sketches": sketches}
+                drift = None
+                if drift_rows is not None:
+                    drift = local_frame(
+                        self.spark, drift_rows,
+                        "column string, psi double, ks_d double, psi_passed boolean, ks_passed boolean",
+                    )
+                    outputs["drift"] = drift
+                # four independent tiny appends, concurrently
+                writes = [
+                    pool.submit(self.io.append, df.coalesce(1).select(tag, "*"), table)
+                    for table, df in outputs.items()
+                ]
+                for w in writes:
+                    w.result()
+                phase("writes")
+
+            # -- then the manifest, last (crash-safe ordering)
             viol_per_part: dict[int, int] = {}
-            all_passed = True
             for r in verdict_rows:
                 p = r["partition_id"]
-                per_part[p] = r["rows_checked"]
-                viol_per_part[p] = viol_per_part.get(p, 0) + int(r["violation_count"])
-                if not r["passed"]:
-                    all_passed = False
-            rows = int(sum(per_part.values()))
-            wall_ms = int((time.monotonic() - t0) * 1000)
+                viol_per_part[p] = viol_per_part.get(p, 0) + r["violation_count"]
+            rows_per_part = {g["partition_id"]: int(g["rows"]) for g in groups}
+            rows = sum(rows_per_part.values())
+            all_passed = all(r["passed"] for r in verdict_rows)
             part_stats = [
                 {
                     "partition_id": p,
-                    "rows": per_part.get(p, 0),
+                    "rows": rows_per_part.get(p, 0),
                     "metrics": {
-                        "violations": int(viol_per_part.get(p, 0)),
+                        "violations": viol_per_part.get(p, 0),
                         **(extra_metrics or {}),
                     },
                 }
                 for p in pending
             ]
-            self.manifest.commit(part_stats, snap, wall_ms)
-
-            mark("manifest commit")
+            self.manifest.commit(part_stats, snap, int((time.monotonic() - t0) * 1000))
+            phase("commit")
         except BaseException:
-            if _viol_cache is not None:
-                _viol_cache.unpersist()
+            if violations is not None:
+                violations.unpersist()
             raise
         finally:
             stats.unpersist()
-            if transcripts is not None:
-                transcripts.unpersist()
         wall = time.monotonic() - t0
         return RunResult(
             snapshot_id=snap,
             partitions_processed=pending,
             rows=rows,
             verdicts=verdict_df,
-            violations=all_violations,
+            violations=violations,
             profile=profile,
             drift=drift,
             clips_per_sec=rows / wall if wall > 0 else 0.0,
             wall_sec=wall,
             all_passed=all_passed,
+            phases=phases,
         )
+
+    # -- tail helpers --------------------------------------------------------
+    def _violations(
+        self, stats: DataFrame, transcripts: DataFrame | None
+    ) -> tuple[list[str], DataFrame]:
+        """Check names (they drive the verdict grid) and the union of every
+        check's violation rows.
+
+        Row-level checks fuse into ONE scan of stats (no joins). Uniqueness
+        and both referential directions come from ONE groupBy over the clip
+        ids of both tables, each row tagged by its side: a key counted more
+        than once on the clip side is a duplicate, one with no transcript
+        row is a clip without transcript, and one seen only on the transcript
+        side is a transcript without clip. That is one exchange where a
+        uniqueness groupBy plus two anti-joins took three, and the
+        transcripts table is scanned once, so it needs no cache.
+        """
+        key = F.col("clip_id")
+        row_specs = [
+            (
+                "pk_not_null",
+                key.isNull() | (F.trim(key) == ""),
+                F.lit("null or empty primary key"),
+            ),
+            (
+                "audio_decodable",
+                ~F.col("decode_ok"),
+                F.coalesce(F.col("decode_err"), F.lit("decode failed")),
+            ),
+            (
+                "dur_ms_consistent",
+                F.col("decode_ok")
+                & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > self.dur_tol_ms),
+                F.concat(
+                    F.lit("declared dur_ms="),
+                    F.col("dur_ms").cast("string"),
+                    F.lit(" decoded_ms="),
+                    F.round("decoded_ms", 1).cast("string"),
+                ),
+            ),
+            (
+                "transcript_not_null",
+                F.col("transcript").isNull() | (F.trim(F.col("transcript")) == ""),
+                F.lit("null or empty transcript"),
+            ),
+        ]
+        n_clip = F.col("__clips")
+        key_specs = [
+            (
+                "pk_unique",
+                n_clip > 1,
+                F.concat(F.lit("duplicate key, count="), n_clip),
+            ),
+        ]
+        sides = stats.select("clip_id", F.lit(1).alias("__clip"), F.lit(0).alias("__tr"))
+        if transcripts is not None:
+            sides = sides.unionByName(
+                transcripts.select("clip_id", F.lit(0).alias("__clip"), F.lit(1).alias("__tr"))
+            )
+            key_specs += [
+                (
+                    "clip_has_transcript",
+                    (n_clip > 0) & (F.col("__trs") == 0),
+                    F.lit("clip has no transcript row"),
+                ),
+                ("transcript_has_clip", n_clip == 0, F.lit("transcript row has no clip")),
+            ]
+        keys = (
+            sides.filter(key.isNotNull())
+            .groupBy("clip_id")
+            .agg(F.sum("__clip").alias("__clips"), F.max("__tr").alias("__trs"))
+        )
+        violations = row_level_violations(stats, row_specs).unionByName(
+            row_level_violations(with_partition_id(keys, self.n_partitions), key_specs)
+        )
+        return [s[0] for s in row_specs + key_specs], violations
+
+    def _read_baseline(self) -> tuple[list, list | None] | None:
+        """Collected (baseline_hist, baseline_meta) rows; None without a
+        baseline, meta None for a pre-meta baseline."""
+        if not self.io.exists(self.spark, "baseline_hist"):
+            return None
+        hist = self.io.read(self.spark, "baseline_hist").collect()
+        if not self.io.exists(self.spark, "baseline_meta"):
+            return hist, None
+        return hist, self.io.read(self.spark, "baseline_meta").collect()
+
+    def _drift(self, stats: DataFrame, baseline) -> list[dict] | None:
+        """PSI + binned-KS per baseline column vs ``baseline`` (from
+        :meth:`_read_baseline`). Current histograms are binned with the
+        BASELINE's persisted edges (baseline_meta) — all numeric columns in
+        one scan of the stats cache. The histogram aggregations run
+        distributed; the comparison is ≤ nbins+2 rows per column, so it is
+        computed driver-side (drift_from_hist_rows) instead of as two join
+        DAGs. Pre-meta baselines (dur_ms only, fixed edges) keep working via
+        the legacy fallback."""
+        if baseline is None:
+            return None
+        base_rows, meta_rows = baseline
+        if meta_rows is not None:
+            hist_ids = {r["baseline_id"] for r in base_rows if "baseline_id" in r.__fields__}
+            meta_ids = {r["baseline_id"] for r in meta_rows if "baseline_id" in r.__fields__}
+            # ANY asymmetry is a mismatch — including one table stamped and
+            # the other pre-stamping-era (a new-code write_baseline that
+            # crashed after meta left exactly that state).
+            if (hist_ids or meta_ids) and hist_ids != meta_ids:
+                raise RuntimeError(
+                    "baseline_hist/baseline_meta carry different baseline_ids "
+                    f"({hist_ids or '{legacy}'} vs {meta_ids or '{legacy}'}) — "
+                    "write_baseline crashed between its two table writes; "
+                    "re-run write_baseline"
+                )
+            specs = {
+                r["column"]: (r["lo"], r["hi"], r["nbins"])
+                for r in meta_rows
+                if r["nbins"] > 0
+            }
+            cur = histograms_multi(stats, specs)
+            for r in meta_rows:
+                if r["nbins"] == 0:  # categorical (stable-hash buckets)
+                    cur = cur.unionByName(categorical_histogram(stats, r["column"]))
+            cur_rows = cur.collect()
+        else:
+            cur_rows = histogram(
+                stats, "dur_ms", lo=0.0, hi=16000.0, nbins=DUR_HIST_BINS
+            ).collect()
+        return [
+            {
+                **d,
+                "psi_passed": d["psi"] <= self.psi_threshold,
+                "ks_passed": d["ks_d"] <= self.ks_threshold,
+            }
+            for d in drift_from_hist_rows(cur_rows, base_rows)
+        ]
 
 
 def summarize(result: RunResult) -> str:

@@ -106,7 +106,8 @@ def column_profile_collected(
     df: DataFrame,
     columns: list[str] | None = None,
     group_cols: list[str] | None = None,
-) -> list[dict]:
+    extra_aggs: dict[str, Column] | None = None,
+) -> tuple[list[dict], list[dict]]:
     """Same metrics as :func:`column_profile`, but the unpivot happens on the
     driver: one wide aggregation job (rows = |groups|, cols = |metrics|),
     collected and melted in Python.
@@ -117,24 +118,34 @@ def column_profile_collected(
     small/medium runs. The wide agg result is bounded (partitions × metrics),
     so collecting it is safe by construction; callers that need a DataFrame
     re-create it from these rows for free.
+
+    ``extra_aggs`` (name → aggregate Column) ride in the SAME aggregation,
+    so a caller needing more per-group values (sketches, say) gets them
+    without another pass over ``df``. Returns ``(profile_rows, group_rows)``:
+    the melted profile, and one dict per group holding the group keys, its
+    row count (``rows``) and each extra aggregate by name.
     """
     if columns is None:
         columns = [f.name for f in df.schema.fields if not isinstance(f.dataType, T.BinaryType)]
     group_cols = group_cols or []
+    extra_aggs = extra_aggs or {}
     exprs, manifest = _profile_exprs(df, columns)
+    exprs += [e.alias(name) for name, e in extra_aggs.items()]
     wide = df.groupBy(*group_cols).agg(*exprs) if group_cols else df.groupBy().agg(*exprs)
     out: list[dict] = []
+    groups: list[dict] = []
     for row in wide.collect():
         d = row.asDict()
         keys = {g: d[g] for g in group_cols}
         rows_n = d["__rows"]
+        groups.append({**keys, "rows": rows_n, **{name: d[name] for name in extra_aggs}})
         for c, m, _ in manifest:
             v = d[f"{c}__{m}"]
             out.append({**keys, "column": c, "metric": m, "value": v})
             if m == "null_count":
                 rate = (v / rows_n) if rows_n and v is not None else None
                 out.append({**keys, "column": c, "metric": "null_rate", "value": rate})
-    return out
+    return out, groups
 
 
 def top_freq(df: DataFrame, column: str, k: int = 1) -> DataFrame:

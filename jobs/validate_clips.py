@@ -242,7 +242,7 @@ def main() -> int:
         from data_profiler_spark.profiling import top_freq
 
         # cross-run table-level quantiles from the merged per-partition
-        # t-digests — includes partitions profiled by earlier (resumed)
+        # KLL sketches — includes partitions profiled by earlier (resumed)
         # runs, which per-run frames above cannot show.
         gq = run.global_quantiles_frame()
         # Describer top/freq parity (reference data_profiler.py:509-519
@@ -291,6 +291,7 @@ def main() -> int:
                 "rows": res.rows,
                 "clips_per_sec": round(res.clips_per_sec, 1),
                 "wall_sec": round(res.wall_sec, 2),
+                "phases": {k: round(v, 3) for k, v in res.phases.items()},
                 "all_passed": res.all_passed,
             }
         )

@@ -13,7 +13,6 @@ from hypothesis.extra.numpy import arrays
 
 from data_profiler_spark.audio.decode import decode_pcm16
 from data_profiler_spark.fixtures import encode_pcm16_raw, encode_pcm16_wav
-from data_profiler_spark.profiling.tdigest import TDigest
 
 finite_pcm = arrays(
     np.float64,
@@ -56,42 +55,46 @@ def test_truncated_wav_never_decodes_silently(pcm, cut):
         np.float64,
         st.integers(min_value=1, max_value=3000),
         elements=st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
-    )
-)
-@settings(max_examples=40, deadline=None)
-def test_tdigest_invariants(data):
-    d = TDigest.from_values(data)
-    # extremes are exact
-    assert d.quantile(0.0) == pytest.approx(float(data.min()))
-    assert d.quantile(1.0) == pytest.approx(float(data.max()))
-    # quantile function is monotone and within the data range
-    qs = np.linspace(0, 1, 21)
-    vals = [d.quantile(q) for q in qs]
-    assert all(a <= b + 1e-9 for a, b in zip(vals, vals[1:]))
-    assert all(data.min() - 1e-9 <= v <= data.max() + 1e-9 for v in vals)
-    # total weight is conserved
-    assert d.n == pytest.approx(len(data))
-
-
-@given(
-    data=arrays(
-        np.float64,
-        st.integers(min_value=10, max_value=2000),
-        elements=st.floats(min_value=-1e4, max_value=1e4, allow_nan=False),
     ),
-    n_splits=st.integers(min_value=2, max_value=5),
+    n_splits=st.integers(min_value=1, max_value=5),
 )
-@settings(max_examples=25, deadline=None)
-def test_tdigest_merge_weight_and_extremes(data, n_splits):
-    """Merging per-split digests conserves weight and exact extremes no
-    matter how the data was partitioned (the resume guarantee)."""
-    merged = TDigest()
-    for part in np.array_split(data, n_splits):
-        if len(part):
-            merged = merged.merge(TDigest.from_values(part))
-    assert merged.n == pytest.approx(len(data))
-    assert merged.quantile(0.0) == pytest.approx(float(data.min()))
-    assert merged.quantile(1.0) == pytest.approx(float(data.max()))
+@settings(max_examples=12, deadline=None)
+def test_kll_split_merge_count_and_rank_error(spark, data, n_splits):
+    """Per-split KLL sketches merged in Spark (the resume guarantee: the
+    table's partitions are sketched by different runs) count every value
+    once, and every quantile they answer is within the pinned rank-error
+    bound of the exact one, however the data was split."""
+    from pyspark.sql import functions as F
+
+    from data_profiler_spark.functions.frames import local_frame
+    from data_profiler_spark.plans.runner import KLL_K, KLL_RANK_ERROR
+
+    qs = [0.0, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
+    rows = [
+        (split, float(v))
+        for split, part in enumerate(np.array_split(data, n_splits))
+        for v in part
+    ]
+    merged = (
+        local_frame(spark, rows, "split int, v double")
+        .groupBy("split")
+        .agg(F.kll_sketch_agg_double("v", KLL_K).alias("sketch"))
+        .agg(F.kll_merge_agg_double("sketch").alias("m"))
+        .select(
+            F.kll_sketch_get_n_double("m").alias("n"),
+            F.kll_sketch_get_quantile_double("m", F.array(*[F.lit(q) for q in qs])).alias("v"),
+        )
+        .collect()[0]
+    )
+    assert merged["n"] == len(data)
+    s = np.sort(data)
+    for q, v in zip(qs, merged["v"]):
+        # v's exact rank is an interval when v repeats; distance from q to it
+        lo = np.searchsorted(s, v, "left") / len(s)
+        hi = np.searchsorted(s, v, "right") / len(s)
+        assert max(lo - q, q - hi) <= KLL_RANK_ERROR, (q, v, lo, hi)
+    # the extremes are kept exactly
+    assert merged["v"][0] == s[0] and merged["v"][-1] == s[-1]
 
 
 from data_profiler_spark.operators.dedup import simhash_band_chunks

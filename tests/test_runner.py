@@ -325,3 +325,72 @@ def test_snapshot_baseline_shares_one_decode(spark, tmp_io, monkeypatch):
     rows2 = {r["column"]: r for r in res2.drift.collect()}
     assert not rows2["rms"]["psi_passed"]
     assert rows2["dur_ms"]["psi_passed"]
+
+
+# Spark jobs of one ValidationRun at fixture size: 200 clips, 8 partitions,
+# transcripts, no drift baseline. A budget may only go down; raising it
+# needs a CHANGES.md line saying why.
+RUN_JOB_BUDGET = 15
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran: the jobs outside any
+    job group, which is every job the engine submits (works with the UI
+    off)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # the tracker is fed through it
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_run_job_budget_and_phases(spark, tmp_io):
+    corr = fixtures.Corruptions(null_clip_id_every=47, duplicate_clip_id_every=31)
+    clips = fixtures.generate_clips(spark, 200, seed=SEED, corruptions=corr)
+    tr = fixtures.generate_transcripts(spark, 200, seed=SEED, orphan_every=61, missing_every=71)
+    run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
+    res, jobs = _jobs_of(spark, lambda: run.run(clips, transcripts=tr))
+    try:
+        assert res.rows == 200
+        assert jobs <= RUN_JOB_BUDGET, f"{jobs} jobs > budget {RUN_JOB_BUDGET}"
+        assert {"manifest_read", "decode", "tail", "writes", "commit"} <= set(res.phases)
+        assert abs(sum(res.phases.values()) - res.wall_sec) <= 0.05 * res.wall_sec
+    finally:
+        res.violations.unpersist()
+
+
+def test_failed_output_write_commits_nothing_and_leaks_no_cache(
+    spark, tmp_io, corrupted, monkeypatch
+):
+    """The four output appends run concurrently; one of them failing must
+    still fail the run BEFORE the manifest commit (crash-safe ordering: the
+    other tables' rows stay orphans that committed reads filter out) and
+    must not leave the stats or violations cache pinned."""
+    from data_profiler_spark.sources.tableio import ParquetTableIO
+
+    real_append = ParquetTableIO.append
+
+    def append(self, df, table):
+        if table == "profile":
+            raise OSError("profile sink down")
+        return real_append(self, df, table)
+
+    monkeypatch.setattr(ParquetTableIO, "append", append)
+
+    def cached_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    clips, tr = corrupted
+    run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
+    before = cached_ids()
+    with pytest.raises(OSError, match="profile sink down"):
+        run.run(clips, transcripts=tr)
+    assert run.manifest.completed_partitions() == set()
+    assert not tmp_io.exists(spark, "manifest")
+    assert tmp_io.exists(spark, "verdicts")  # written, but an orphan
+    assert run.read_committed("verdicts").count() == 0
+    leaked = cached_ids() - before
+    assert not leaked, f"RDDs newly cached after raising run: {leaked}"

@@ -1,74 +1,21 @@
-"""Mergeable t-digest sketches: rank accuracy, merge associativity, and the
-engine property that motivates them — quantiles across partitions profiled
-by DIFFERENT resumed runs, computed from stored sketches alone."""
+"""Cross-run quantiles from the persisted per-partition KLL sketches: the
+engine property that motivates storing them — quantiles across partitions
+profiled by DIFFERENT resumed runs, computed from stored sketches alone.
+(The sketch itself is Spark's kll_sketch_agg_double; its merge and
+rank-error properties are in test_properties.py.)"""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from data_profiler_spark import fixtures
 from data_profiler_spark.plans.runner import ValidationRun
-from data_profiler_spark.profiling.tdigest import (
-    TDigest,
-    merge_sketch_rows,
-    sketch_by_group,
-)
 
-RNG = np.random.default_rng(11)
 QS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 
 
 def rank_of(sorted_x: np.ndarray, v: float) -> float:
     return np.searchsorted(sorted_x, v) / len(sorted_x)
-
-
-def assert_rank_accurate(x: np.ndarray, digest: TDigest, tol: float = 0.02):
-    s = np.sort(x)
-    for q in QS:
-        v = digest.quantile(q)
-        assert abs(rank_of(s, v) - q) <= tol, (q, v, rank_of(s, v))
-
-
-def test_rank_accuracy_lognormal():
-    x = RNG.lognormal(3.0, 1.2, size=50_000)
-    assert_rank_accurate(x, TDigest.from_values(x))
-
-
-def test_merge_matches_single_digest():
-    x = RNG.normal(0, 1, size=40_000)
-    parts = np.array_split(x, 7)
-    merged = TDigest()
-    for p in parts:
-        merged = merged.merge(TDigest.from_values(p))
-    assert_rank_accurate(x, merged)
-    # extremes survive merging exactly
-    assert merged.quantile(0.0) == pytest.approx(x.min())
-    assert merged.quantile(1.0) == pytest.approx(x.max())
-
-
-def test_json_roundtrip():
-    x = RNG.uniform(0, 100, size=5_000)
-    d = TDigest.from_values(x)
-    d2 = TDigest.from_json(d.to_json())
-    for q in QS:
-        assert d2.quantile(q) == pytest.approx(d.quantile(q), rel=1e-9)
-
-
-def test_sketch_by_group_spark(spark):
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "partition_id": np.repeat([0, 1, 2], 2000),
-            "v": RNG.lognormal(2.0, 1.0, size=6000),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    rows = sketch_by_group(df, ["v"]).collect()
-    assert {r["partition_id"] for r in rows} == {0, 1, 2}
-    merged = merge_sketch_rows(rows, column="v")
-    assert_rank_accurate(pdf["v"].to_numpy(), merged)
 
 
 def test_cross_run_quantiles_from_sketches(spark, tmp_io):

@@ -280,6 +280,31 @@ def test_frame_sample_short_clip_dedupes_indices(spark):
     assert sorted(r["frame_idx"] for r in out) == [0, 1]
 
 
+def test_frame_sample_encoder_failure_drops_clip_frames(spark, monkeypatch):
+    """An encoder failing on a clip's SECOND sampled frame must leave that
+    clip with exactly one sample_err row — not its first frame's row plus
+    an error row — and must not touch the other clips."""
+    second = _frames(7, 6, 8, seed=0)[3]  # v0's sampled frames are 0, 3, 6
+
+    def fails_on_second_frame(px, fmt):
+        if np.array_equal(px, second):
+            raise ValueError("encoder failed")
+        return ic.encode_bmp(px)
+
+    monkeypatch.setitem(multimodal._ENCODERS, "bmp_fail2", fails_on_second_frame)
+    media = _media_df(spark, 2, frames_per_clip=7)
+    out = multimodal.frame_sample(media, n_samples=3, image_fmt="bmp_fail2").collect()
+    by_id: dict[str, list] = {}
+    for r in out:
+        by_id.setdefault(r["media_id"], []).append(r)
+    assert len(by_id["v0"]) == 1
+    err = by_id["v0"][0]
+    assert err["payload"] is None and err["frame_idx"] is None
+    assert "encoder failed" in err["sample_err"]
+    assert sorted(r["frame_idx"] for r in by_id["v1"]) == [0, 3, 6]
+    assert all(r["sample_err"] is None for r in by_id["v1"])
+
+
 def test_unregistered_video_format_is_violation_row(spark):
     df = spark.createDataFrame(
         [("x", bytearray(b"\x00" * 64), "mp4")],
