@@ -34,36 +34,17 @@ HEADLINE = [
     "user_running_value",
     "profile_column_stats",
     "verdict_grid",
-    # r3: psi_drift + ks_exact_drift merged into drift_scores (same two
-    # computations, one long-format frame) — expect ≈ r2's psi_drift plus
-    # the KS applyInPandas pass that used to run unbenchmarked.
     "drift_scores",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    # r3: text_quality merged into text_features (lang+quality+tokens+
-    # fingerprint in ONE projection) — slightly more work than r2's
-    # text_quality under a new name; see BENCH/BASELINE.md.
     "text_features",
     "ann_cosine_topk",
     "ann_ivf_topk",
     "part_material_flow",
     "hll_distinct",
     "quantile_sketch",
-    # r3 additions (new keys — excluded from the r2-compat subtotal below):
-    # transitive-closure dup clustering (iterative large-star/small-star,
-    # genuinely multi-round) and deterministic stratified sampling.
     "dup_clusters",
     "stratified_sample",
-]
-
-# keys present in BENCH_r02 — their sum is emitted as
-# total_headline_r2_compat_sec so round-over-round totals compare
-# like-for-like despite the r3 additions/renames above.
-_R2_COMPAT = [
-    "pricing_summary", "top_revenue_orders", "pareto_abc_parts",
-    "user_running_value", "profile_column_stats", "verdict_grid",
-    "dedup_minhash_lsh", "dedup_simhash", "ann_cosine_topk", "ann_ivf_topk",
-    "part_material_flow", "hll_distinct", "quantile_sketch",
 ]
 
 
@@ -83,7 +64,7 @@ def main() -> int:
     # warm the JVM/codegen once so per-query times are steady-state
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     # Two executions per query, both reported. Run 1 (queries_first_run)
-    # is the r2/r3-comparable single-shot; run 2 (queries) is steady-state.
+    # is the single-shot; run 2 (queries) is steady-state.
     # Measured r4: the first execution carries 2-4x of per-plan-shape cost
     # (whole-stage-codegen compile, Python worker spin-up, fresh-page
     # faults) whose size varies with KERNEL state (DAMON reclaim; see
@@ -152,8 +133,6 @@ def main() -> int:
 
     first_run["clips_validate"] = timings["clips_validate"]  # already best-of-3
     total = round(sum(timings.values()), 3)
-    r2_compat = round(sum(first_run[k] for k in _R2_COMPAT if k in first_run)
-                      + timings["clips_validate"], 3)
     out = {
         "metric": "total_headline_sec",
         "value": total,
@@ -161,7 +140,7 @@ def main() -> int:
         "methodology": "queries = steady-state (best of 2nd and 3rd "
         "executions — min-of-2 post-warm runs; one draw samples the "
         "kernel-noise distribution, see below); queries_first_run = "
-        "r2/r3-comparable single-shot (1st execution). "
+        "single-shot (1st execution). "
         "First executions carry 2-4x per-plan-shape cost (codegen compile, "
         "Python worker spin-up, fresh-page faults) that varies with kernel "
         "state on this sandbox (DAMON page reclaim), giving sub-3s "
@@ -171,15 +150,6 @@ def main() -> int:
         "disclosed in clips_trial_rates).",
         "queries_first_run": first_run,
         "total_headline_first_run_sec": round(sum(first_run.values()), 3),
-        # compat subtotal stays on FIRST-run values — that is what r2/r3
-        # measured
-        "total_headline_r2_compat_sec": r2_compat,
-        # honesty note on the compat subtotal: BENCH_r02's total ALSO
-        # included psi_drift and text_quality, which have no same-name r3+
-        # counterpart (their supersets drift_scores / text_features do more
-        # work) — so this subtotal under-counts a true r2-equivalent by
-        # those two keys' cost (~2.5 s at r2).
-        "r2_compat_excludes": ["psi_drift", "text_quality"],
         "queries": timings,
         "sf": sf,
         "clips_n": clips_n,

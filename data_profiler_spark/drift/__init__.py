@@ -1,8 +1,8 @@
 from data_profiler_spark.drift.drift import (  # noqa: F401
+    KS_THRESHOLD,
+    PSI_THRESHOLD,
     drift_from_hist_rows,
-    ks_binned,
-    ks_binned_paired,
+    drift_paired,
     ks_exact_by_group,
-    psi,
-    psi_paired,
+    pair_histograms,
 )

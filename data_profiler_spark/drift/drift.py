@@ -1,215 +1,151 @@
 """Distribution-drift tests vs a baseline profile snapshot: PSI and KS.
 
 The reference's closest analog is the Data Describer's histogram + summary
-stats (data_profiler.py:503-597 in /root/reference) — it renders them for a
-human to eyeball; here the comparison is a first-class operator against a
-persisted baseline histogram (HISTOGRAM_SCHEMA), producing drift scores and
-verdict-ready booleans.
+stats (data_profiler.py:582-588) — it renders them for a human to eyeball;
+here the comparison is a first-class operator against a persisted baseline
+histogram (HISTOGRAM_SCHEMA), producing drift scores and pass/fail verdicts.
 
-Scale design:
-- PSI and binned-KS operate on *histograms* (≤ a few hundred rows per
-  column) — the only pass over the data is the histogram aggregation
-  itself; the drift math is windows + aggregation over those tiny frames
-  (no self-join: a groupBy-totals + join-back shape would re-derive the
-  histogram subtree and pay a second input scan).
-- :func:`ks_exact_by_group` is the exact two-sample KS for *bounded* groups
-  (e.g. per-codec within a partition) via applyInPandas — Arrow-batched,
-  vectorized numpy inside, never applied to an unbounded global column.
+One core, two twins:
+- :func:`pair_histograms` puts two histograms side by side as
+  (keys…, bucket, c_cnt, b_cnt) rows — a side-tagged union and one groupBy,
+  no join. A frame that already holds both populations (e.g. one
+  conditional aggregation over an events table) is that shape directly.
+- :func:`drift_paired` scores such a frame in Spark: one window
+  partitioning and one aggregation give PSI, binned KS and both verdicts.
+- :func:`drift_from_hist_rows` is the same math in plain Python over
+  collected histogram rows (≤ nbins+2 rows per column at any data scale) —
+  what ``ValidationRun`` uses once its histogram aggregation has run, and
+  the reference the tests hold :func:`drift_paired` to.
+
+Both apply the rules defined here and nowhere else:
+- ε-smoothed PSI = Σ_b (p_b − q_b) · ln(p_b / q_b); binned KS
+  D = max_b |CDF_cur(b) − CDF_base(b)| over bucket order. Binned KS is
+  within the largest bucket's probability mass of the exact statistic.
+- Empty population: a side whose total count is 0 has no distribution, so
+  its ``psi`` and ``ks_d`` are NULL/None and both verdicts fail. The DuckDB
+  oracle SQL (x / 0 is NULL there) gives the same NULLs.
+- Pass rule: a score passes when it is ``<=`` its threshold
+  (:data:`PSI_THRESHOLD`, :data:`KS_THRESHOLD`).
+
+:func:`ks_exact_by_group` is the exact two-sample KS for *bounded* groups
+(e.g. per-codec within a partition) via applyInPandas — Arrow-batched,
+vectorized numpy inside, never applied to an unbounded global column.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 EPS = 1e-6  # smoothing for empty buckets (standard PSI practice)
+# Rule of thumb for PSI: < 0.1 stable, 0.1–0.25 moderate, > 0.25 drifted.
+PSI_THRESHOLD = 0.25
+KS_THRESHOLD = 0.2
 
 
-def psi(
-    current_hist: DataFrame,
-    baseline_hist: DataFrame,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Population Stability Index per column (and per extra group).
-
-    PSI = Σ_buckets (p_i − q_i) · ln(p_i / q_i), p=current share, q=baseline
-    share, ε-smoothed. Inputs are HISTOGRAM_SCHEMA frames with identical
-    bucket edges (the current histogram must be built with the baseline's
-    lo/hi — the engine persists those in the baseline snapshot).
-
-    ``group_cols`` scores each group independently (one PSI per (column,
-    *group)); BOTH frames must carry the columns — the windowed-drift
-    stream replicates its baseline per event-time window this way.
-
-    Rule of thumb: <0.1 stable, 0.1–0.25 moderate, >0.25 drifted.
-    """
-    g = group_cols or []
-    keys = ["column", *g]
-    cur = current_hist.groupBy(*keys, "bucket").agg(F.sum("count").alias("c_cnt"))
-    base = baseline_hist.groupBy(*keys, "bucket").agg(F.sum("count").alias("b_cnt"))
-    joined = cur.join(base, [*keys, "bucket"], "full_outer").fillna(
-        0, subset=["c_cnt", "b_cnt"]
-    )
-    return _psi_of_joined(joined, keys)
+def _passed(score, threshold: float):
+    """The pass rule, for a Spark column or a Python score: at or below the
+    threshold passes; a missing score (empty population) fails."""
+    if isinstance(score, Column):
+        return F.coalesce(score <= threshold, F.lit(False))
+    return score is not None and score <= threshold
 
 
-def psi_paired(counts: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """PSI from a pre-paired per-bucket counts frame — the single-scan shape.
-
-    ``counts`` carries (column, *group_cols, bucket, c_cnt, b_cnt): both
-    populations' counts per bucket, typically produced by ONE conditional
-    aggregation over a table that holds both (e.g. current vs. baseline
-    segments of the same events table). :func:`psi` joins two separately
-    built histograms — the right shape when the baseline is a persisted
-    snapshot; when both populations live in one table, building the two
-    histograms separately scans it twice and full-outer-joins what one
-    ``sum(when(...))`` aggregation produces directly. Same math, same
-    ε-smoothing, identical output (a bucket absent from one population is a
-    0 count here exactly as the full-outer join + fillna(0) yields there —
-    pinned by tests/test_drift.py).
-
-    Precondition: ``counts`` must be at (column, *group_cols, bucket) grain —
-    a bucket split across several rows gets the ε smoothing once per row and
-    inflates the score (unlike :func:`ks_binned_paired`, whose RANGE-frame
-    CDF absorbs duplicates). Re-aggregate first if the frame isn't grouped.
-    """
-    keys = ["column", *(group_cols or [])]
-    return _psi_of_joined(counts, keys)
-
-
-def _psi_of_joined(joined: DataFrame, keys: list[str]) -> DataFrame:
-    """Shared PSI core over (keys..., bucket, c_cnt, b_cnt) rows.
-
-    Totals come from a window over the counts frame, not a groupBy +
-    self-join: the frame is ≤ nbins+2 rows per key (same bounded-window
-    argument as :func:`ks_binned`), and the self-join shape would re-derive
-    the counts subtree — at scan level, that's a SECOND pass over the input
-    table for a sum the window gets in place."""
-    w = Window.partitionBy(*keys)
-    p = F.col("c_cnt") / F.sum("c_cnt").over(w) + EPS
-    q = F.col("b_cnt") / F.sum("b_cnt").over(w) + EPS
-    term = (p - q) * F.log(p / q)
+def pair_histograms(cur: DataFrame, base: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys…, bucket, c_cnt, b_cnt) from two HISTOGRAM-shaped frames that
+    both carry ``keys`` (normally ``["column", *group_cols]``), ``bucket``
+    and ``count``. A bucket present on one side only gets a 0 count on the
+    other. Both sides must be binned with the same edges."""
+    zero = F.lit(0).cast("long")
+    cnt = F.col("count").cast("long")
     return (
-        joined.select(*keys, term.alias("__psi_term"))
-        .groupBy(*keys)
-        .agg(F.sum("__psi_term").alias("psi"))
+        cur.select(*keys, "bucket", cnt.alias("c_cnt"), zero.alias("b_cnt"))
+        .unionByName(base.select(*keys, "bucket", zero.alias("c_cnt"), cnt.alias("b_cnt")))
+        .groupBy(*keys, "bucket")
+        .agg(F.sum("c_cnt").alias("c_cnt"), F.sum("b_cnt").alias("b_cnt"))
     )
 
 
-def ks_binned_paired(
-    counts: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Binned KS from a pre-paired per-bucket counts frame — the single-scan
-    shape, exactly :func:`psi_paired`'s relationship to :func:`psi`.
+def drift_paired(counts: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
+    """(column, *group_cols, psi, ks_d, psi_passed, ks_passed) per
+    (column, *group_cols) of a paired counts frame.
 
-    ``counts`` carries (column, *group_cols, bucket, c_cnt, b_cnt). When both
-    populations' histograms come out of ONE conditional aggregation,
-    :func:`ks_binned` would full-outer-join two projections of the same frame
-    and broadcast-join totals back — four extra tiny stages per call. Here the
-    CDFs and totals come from two windows over the same partitioning (one
-    exchange), then a groupBy on the already-hash-partitioned keys. Identical
-    output (a bucket absent from one population is a 0 count either way —
-    pinned by tests/test_drift.py).
+    ``counts`` carries (column, *group_cols, bucket, c_cnt, b_cnt) at that
+    grain — :func:`pair_histograms` output, or one conditional aggregation
+    over a table that holds both populations. A bucket split across several
+    rows gets the ε smoothing once per row and inflates PSI (the RANGE-frame
+    CDF makes KS immune), so re-aggregate a frame that isn't grouped.
 
-    The cumulative window uses a RANGE frame, so a bucket that appears on
-    several input rows (e.g. two histograms stacked without re-grouping)
-    contributes all its rows to every CDF point at or past it — the result
-    is the same as pre-aggregating to (keys, bucket) grain, with no extra
-    shuffle and no order-dependence on tied buckets (a ROWS frame would
-    evaluate shuffle-dependent mid-bucket CDF points; pinned by
-    tests/test_drift.py)."""
+    Totals and CDFs are two frames of ONE window spec (partition by the
+    keys, order by bucket), so Spark evaluates them in one Window operator
+    after one exchange, and the final groupBy reuses that partitioning. The
+    frame is ≤ nbins+2 rows per key, so a key's single-task window is
+    metadata at any data scale."""
     keys = ["column", *(group_cols or [])]
-    tot_w = Window.partitionBy(*keys)
-    cum_w = (
-        Window.partitionBy(*keys)
-        .orderBy("bucket")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
+    w = Window.partitionBy(*keys).orderBy("bucket")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    upto = w.rangeBetween(Window.unboundedPreceding, 0)
+    c_tot, b_tot = F.sum("c_cnt").over(whole), F.sum("b_cnt").over(whole)
+    # try_divide: a 0 total yields NULL terms, so sum/max give NULL scores
+    p = F.try_divide(F.col("c_cnt"), c_tot) + EPS
+    q = F.try_divide(F.col("b_cnt"), b_tot) + EPS
     d = F.abs(
-        F.sum("c_cnt").over(cum_w) / F.sum("c_cnt").over(tot_w)
-        - F.sum("b_cnt").over(cum_w) / F.sum("b_cnt").over(tot_w)
+        F.try_divide(F.sum("c_cnt").over(upto), c_tot)
+        - F.try_divide(F.sum("b_cnt").over(upto), b_tot)
     )
-    return (
-        counts.select(*keys, d.alias("__d"))
+    scored = (
+        counts.select(*keys, ((p - q) * F.log(p / q)).alias("__psi"), d.alias("__d"))
         .groupBy(*keys)
-        .agg(F.max("__d").alias("ks_d"))
+        .agg(F.sum("__psi").alias("psi"), F.max("__d").alias("ks_d"))
     )
-
-
-def ks_binned(
-    current_hist: DataFrame,
-    baseline_hist: DataFrame,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """KS D-statistic approximated from binned CDFs.
-
-    D = max_b |CDF_cur(b) − CDF_base(b)|, cumulative sums over bucket order.
-    Error vs exact KS ≤ max bucket probability mass — acceptable for drift
-    gating, and it never touches row data. The per-(column, *group) window
-    is over ≤ nbins+2 rows, so the single-task window is irrelevant.
-    """
-    g = group_cols or []
-    keys = ["column", *g]
-    cur = current_hist.groupBy(*keys, "bucket").agg(F.sum("count").alias("c_cnt"))
-    base = baseline_hist.groupBy(*keys, "bucket").agg(F.sum("count").alias("b_cnt"))
-    joined = cur.join(base, [*keys, "bucket"], "full_outer").fillna(
-        0, subset=["c_cnt", "b_cnt"]
-    )
-    tot = joined.groupBy(*keys).agg(
-        F.sum("c_cnt").alias("c_tot"), F.sum("b_cnt").alias("b_tot")
-    )
-    j = joined.join(F.broadcast(tot), keys)
-    w = Window.partitionBy(*keys).orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cdf_diff = F.abs(
-        F.sum("c_cnt").over(w) / F.col("c_tot") - F.sum("b_cnt").over(w) / F.col("b_tot")
-    )
-    return (
-        j.withColumn("__d", cdf_diff)
-        .groupBy(*keys)
-        .agg(F.max("__d").alias("ks_d"))
+    return scored.select(
+        "*",
+        _passed(F.col("psi"), PSI_THRESHOLD).alias("psi_passed"),
+        _passed(F.col("ks_d"), KS_THRESHOLD).alias("ks_passed"),
     )
 
 
 def drift_from_hist_rows(cur_rows: list, base_rows: list) -> list[dict]:
-    """PSI + binned-KS per column from two collected histogram row sets.
+    """:func:`drift_paired` over two collected histogram row sets
+    (``column``, ``bucket``, ``count``): one dict per column with ``psi``,
+    ``ks_d``, ``psi_passed`` and ``ks_passed``. A column seen on one side
+    only has an empty population on the other."""
 
-    Same math as :func:`psi` / :func:`ks_binned`, but in plain Python: a
-    histogram is ≤ nbins+2 rows per column *by construction at any data
-    scale*, so once the (distributed) histogram aggregation has run, the
-    drift comparison is metadata — doing it driver-side removes two join
-    DAGs per run. The Spark versions remain for composing drift into larger
-    lazy pipelines (and for the oracle-checked corpus entry).
-    """
     def acc(rows):
         d: dict[str, dict[int, int]] = {}
         for r in rows:
-            col = r["column"]
-            d.setdefault(col, {})
-            d[col][r["bucket"]] = d[col].get(r["bucket"], 0) + r["count"]
+            col = d.setdefault(r["column"], {})
+            col[r["bucket"]] = col.get(r["bucket"], 0) + r["count"]
         return d
 
     cur, base = acc(cur_rows), acc(base_rows)
     out = []
     for col in sorted(set(cur) | set(base)):
-        c = cur.get(col, {})
-        b = base.get(col, {})
-        buckets = sorted(set(c) | set(b))
-        c_tot = sum(c.values()) or 1
-        b_tot = sum(b.values()) or 1
-        psi_v = 0.0
-        cdf_c = cdf_b = 0.0
-        ks = 0.0
-        for k in buckets:
-            p = c.get(k, 0) / c_tot + EPS
-            q = b.get(k, 0) / b_tot + EPS
-            psi_v += (p - q) * float(np.log(p / q))
-            cdf_c += c.get(k, 0) / c_tot
-            cdf_b += b.get(k, 0) / b_tot
-            ks = max(ks, abs(cdf_c - cdf_b))
-        out.append({"column": col, "psi": psi_v, "ks_d": ks})
+        c, b = cur.get(col, {}), base.get(col, {})
+        c_tot, b_tot = sum(c.values()), sum(b.values())
+        psi_v = ks = None
+        if c_tot and b_tot:
+            psi_v = ks = 0.0
+            cum_c = cum_b = 0
+            for k in sorted(set(c) | set(b)):
+                p = c.get(k, 0) / c_tot + EPS
+                q = b.get(k, 0) / b_tot + EPS
+                psi_v += (p - q) * float(np.log(p / q))
+                cum_c += c.get(k, 0)
+                cum_b += b.get(k, 0)
+                ks = max(ks, abs(cum_c / c_tot - cum_b / b_tot))
+        out.append(
+            {
+                "column": col,
+                "psi": psi_v,
+                "ks_d": ks,
+                "psi_passed": _passed(psi_v, PSI_THRESHOLD),
+                "ks_passed": _passed(ks, KS_THRESHOLD),
+            }
+        )
     return out
 
 

@@ -19,10 +19,10 @@ the window. Slots were reclaimed by merging, not dropping, coverage:
 - quantile_sketch and hll_distinct graduated from rows-only to oracled
   (exact counterpart values hash-checked + sketch error bound pinned true)
 - drift_scores = psi_drift + ks_exact_drift (both computations unchanged,
-  union'd into the production drift table's long format); r5 folds in the
-  grouped per-day PSI core (psi_paired(group_cols=...), the windowed-drift
-  shape) and global + per-day binned KS (ks_binned_paired) from the same
-  single pinned events scan as the global row
+  union'd into the production drift table's long format); r5 folds in
+  per-day PSI and global + per-day binned KS, all from the same single
+  pinned events scan as the global row through the one drift core
+  (drift_paired, with group_cols=["day"] for the windowed-drift shape)
 - hll_distinct absorbed distinct_counts_exact (one fused agg emits the
   A7/A8 exact universes plus the A9 sketch bounds)
 

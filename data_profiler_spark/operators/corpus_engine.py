@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from data_profiler_spark.audio.decode import decode_stats
 from data_profiler_spark.checks import constraints
-from data_profiler_spark.drift.drift import ks_binned_paired, ks_exact_by_group, psi_paired
+from data_profiler_spark.drift.drift import drift_paired, ks_exact_by_group
 from data_profiler_spark.fixtures import generate_clips
 from data_profiler_spark.operators.corpus_relational import T
 from data_profiler_spark.profiling.profile import column_profile, outlier_counts
@@ -280,14 +280,12 @@ def _psi_bucket() -> F.Column:
 
 def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI of purchase-event values vs the view/click baseline, through the
-    engine's psi_paired() pipeline: both populations live in the SAME events
-    table, so ONE conditional aggregation over ONE scan produces both
-    histograms — the two-scan shape (separate _event_hist per population +
-    full-outer join, what psi() is for when the baseline is a persisted
-    snapshot) reads the table twice for no extra information. Identical
-    output (same bucketing, same ε-smoothing; the single-scan == two-scan
-    equivalence is pinned by tests/test_drift.py); events appears exactly
-    once in this entry's plan (tests/test_plan_audit.py)."""
+    engine's drift_paired() core: both populations live in the SAME events
+    table, so ONE conditional aggregation over ONE scan produces the paired
+    (bucket, c_cnt, b_cnt) counts directly — building two histograms and
+    pairing them would read the table twice for no extra information.
+    events appears exactly once in this entry's plan
+    (tests/test_plan_audit.py)."""
     ev = T(spark, sf_dir, "events")
     v = F.col("value")
     is_cur = F.col("event_type") == "purchase"
@@ -302,7 +300,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("column", F.lit("value"))
     )
-    return psi_paired(counts).select("column", F.round("psi", 6).alias("psi"))
+    return drift_paired(counts).select("column", F.round("psi", 6).alias("psi"))
 
 
 # The PSI bucket rule as SQL, interpolated into every oracle that bins
@@ -353,9 +351,10 @@ _DAY_COUNTS_CTE = f"""
 
 # Grouped PSI (r5 slot-reclaim extension of drift_scores): the same
 # purchase-vs-view/click comparison scored independently PER EVENT DAY —
-# the psi_paired(group_cols=...) core that streaming windowed drift
-# replicates per event-time window, previously pinned only by the numpy
-# property test. Same bucketing, same ε, same single-scan counts.
+# the drift_paired(group_cols=...) core that streaming windowed drift
+# scores per event-time window. Same bucketing, same ε, same single-scan
+# counts. A day with no purchases has c_tot = 0, so its PSI is NULL (x / 0
+# is NULL in DuckDB), the engine's empty-population rule.
 GROUPED_PSI_SQL = f"""
 WITH j AS ({_DAY_COUNTS_CTE}
 ), t AS (SELECT day, SUM(c_cnt) AS c_tot, SUM(b_cnt) AS b_tot FROM j GROUP BY 1)
@@ -368,11 +367,10 @@ GROUP BY 1, 2
 """
 
 
-# Binned KS (r5, same slot-reclaim): drift.ks_binned — the histogram-CDF
-# KS approximation the production drift job scores baselines with — was
-# only approximation-tested (test_drift.py vs exact KS); these rows put it
-# through the value-hash oracle, global AND per-day, from the same pinned
-# counts frame. D = max_b |CDF_cur(b) − CDF_base(b)| over bucket order.
+# Binned KS (r5, same slot-reclaim): drift_paired's ks_d — the histogram-CDF
+# KS approximation the production drift job scores baselines with — through
+# the value-hash oracle, global AND per-day, from the same pinned counts
+# frame. D = max_b |CDF_cur(b) − CDF_base(b)| over bucket order.
 BINNED_KS_SQL = f"""
 WITH j AS ({_DAY_COUNTS_CTE}
 ), g AS (
@@ -622,22 +620,21 @@ FROM c GROUP BY event_type
 
 def drift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's drift report in one frame (r3 slot reclaim: psi_drift +
-    ks_exact_drift merged; r5 extends it with GROUPED per-day PSI — the
-    psi_paired(group_cols=...) core streaming windowed drift replicates per
-    event-time window, previously pinned only by the numpy property test —
-    and with global + per-day binned KS via ks_binned_paired, all without
-    spending a corpus slot): one row per drift metric, (metric, value, n).
-    PSI and binned KS ride the histogram pipeline, exact KS the
+    ks_exact_drift merged; r5 extends it with GROUPED per-day PSI and binned
+    KS — the drift_paired(group_cols=...) core streaming windowed drift
+    scores per event-time window): one row per drift metric, (metric,
+    value, n). PSI and binned KS ride the histogram pipeline, exact KS the
     applyInPandas path vs the md5-sampled baseline — every engine drift
     path stays fully exercised and fully oracled.
 
     Scan shape: ONE events pass builds the (day, bucket)-grain conditional
-    counts, pinned; the global PSI/KS re-aggregate those integer counts
+    counts, pinned; the global scores re-aggregate those integer counts
     across days (exactly psi_drift's bucket-grain counts, so the
-    'psi:value' row is unchanged) and the grouped metrics score each day
-    from the same pinned frame — the old two-branch shape would have paid
-    a second full events scan for the day grain. Exact KS keeps its own
-    raw-value scan (not derivable from any histogram)."""
+    'psi:value' row is unchanged) and the per-day scores come from the same
+    pinned frame. Each grain is one drift_paired call whose psi and ks_d
+    both become rows. Exact KS keeps its own raw-value scan (not derivable
+    from any histogram). A day without purchases scores NULL psi and ksb
+    (drift.py's empty-population rule, the oracle's NULL)."""
     from data_profiler_spark.functions.windows import pin_cache
 
     ev = T(spark, sf_dir, "events")
@@ -660,45 +657,31 @@ def drift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_counts = day_counts.groupBy("column", "bucket").agg(
         F.sum("c_cnt").alias("c_cnt"), F.sum("b_cnt").alias("b_cnt")
     )
-    p = psi_paired(global_counts).select(
-        F.concat(F.lit("psi:"), F.col("column")).alias("metric"),
-        F.round("psi", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    gp = psi_paired(
-        day_counts.filter(F.col("day").isNotNull()), group_cols=["day"]
-    ).select(
-        F.concat(F.lit("psi:"), F.col("column"), F.lit(":"), F.col("day")).alias(
-            "metric"
-        ),
-        F.round("psi", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    # binned KS (drift.ks_binned_paired — the histogram-CDF approximation
-    # the production drift job scores with, in the paired single-scan shape;
-    # identical to ks_binned, pinned by test_drift.py) through the
-    # value-hash oracle, global and per-day, from the SAME pinned counts —
-    # no extra events pass, no self-join of the counts frame.
-    kb = ks_binned_paired(global_counts).select(
-        F.concat(F.lit("ksb:"), F.col("column")).alias("metric"),
-        F.round("ks_d", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
-    )
-    kbd = ks_binned_paired(
-        day_counts.filter(F.col("day").isNotNull()), group_cols=["day"]
-    ).select(
-        F.concat(F.lit("ksb:"), F.col("column"), F.lit(":"), F.col("day")).alias(
-            "metric"
-        ),
-        F.round("ks_d", 6).alias("value"),
-        F.lit(None).cast("long").alias("n"),
+
+    def metric_rows(scored: DataFrame, suffix) -> DataFrame:
+        # psi:<column><suffix> and ksb:<column><suffix> from one scored row
+        rows = [
+            F.struct(
+                F.concat(F.lit(prefix), F.col("column"), suffix).alias("metric"),
+                F.round(score, 6).alias("value"),
+            )
+            for prefix, score in (("psi:", "psi"), ("ksb:", "ks_d"))
+        ]
+        return scored.select(F.explode(F.array(*rows)).alias("r")).select(
+            "r.*", F.lit(None).cast("long").alias("n")
+        )
+
+    g = metric_rows(drift_paired(global_counts), F.lit(""))
+    d = metric_rows(
+        drift_paired(day_counts.filter(F.col("day").isNotNull()), group_cols=["day"]),
+        F.concat(F.lit(":"), F.col("day")),
     )
     k = ks_exact_drift(spark, sf_dir).select(
         F.concat(F.lit("ks:"), F.col("event_type")).alias("metric"),
         F.col("ks_d").alias("value"),
         F.col("n"),
     )
-    return p.unionByName(gp).unionByName(kb).unionByName(kbd).unionByName(k)
+    return g.unionByName(d).unionByName(k)
 
 
 DRIFT_SCORES_SQL = f"""

@@ -8,11 +8,11 @@ Two tiers:
 - ``cosine_topk``: brute-force exact top-k — broadcast the (small) query
   set against the full corpus; one shuffle for the per-query top-k window.
   This is the correctness baseline and the refinement step.
-- ``lsh_topk``: random-hyperplane LSH — corpus and queries are bucketed by
-  sign-pattern; candidate generation is an equi-join on the bucket key, so
-  the corpus is scanned once and never cross-joined. At 100 TB the bucket
-  join co-partitions by key; multi-probe (flipping one plane at a time)
-  trades recall for fan-out without rebuilding the index.
+- ``lsh_topk_multi``: random-hyperplane LSH over several hash tables —
+  corpus and queries are bucketed by sign-pattern per table; candidate
+  generation is an equi-join on (table, bucket), so the corpus is scanned
+  once and never cross-joined. At 100 TB the bucket join co-partitions by
+  key.
 
 Both paths are pure Catalyst expressions (functions/vectors.py) — the dot
 product folds JVM-side; no Python touches row data.
@@ -139,40 +139,6 @@ def lsh_topk_multi(
         "query_id",
         "vec_id",
         F.round(cosine_similarity(F.col("__qvec"), F.col("__cvec")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", F.col("rank").cast("int"))
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's hyperplane bucket,
-    refined by exact cosine. Recall is tuned by plane count (fewer planes →
-    bigger buckets → higher recall, more compute)."""
-    cb = hyperplane_bucket(corpus, planes, id_col, vec_col).withColumnsRenamed(
-        {id_col: "vec_id", vec_col: "__cvec"}
-    )
-    qb = hyperplane_bucket(queries, planes, id_col, vec_col).withColumnsRenamed(
-        {id_col: "query_id", vec_col: "__qvec"}
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_similarity(F.col("__qvec"), F.col("__cvec")), 6).alias("cosine"),
-        )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (

@@ -50,7 +50,6 @@ from data_profiler_spark.plans.manifest import Manifest
 from data_profiler_spark.profiling import (
     categorical_histogram,
     column_profile_collected,
-    histogram,
     histograms_multi,
 )
 from data_profiler_spark.schemas import VERDICT_SCHEMA, VIOLATION_SCHEMA
@@ -108,8 +107,6 @@ class ValidationRun:
         io: TableIO,
         n_partitions: int = 32,
         dur_tol_ms: float = 5.0,
-        psi_threshold: float = 0.25,
-        ks_threshold: float = 0.2,
         salt_mode: str = "stats",
         manifest_table: str = "manifest",
     ):
@@ -132,8 +129,6 @@ class ValidationRun:
         self.io = io
         self.n_partitions = n_partitions
         self.dur_tol_ms = dur_tol_ms
-        self.psi_threshold = psi_threshold
-        self.ks_threshold = ks_threshold
         if salt_mode not in ("stats", "bytes", "none"):
             raise ValueError(f"salt_mode must be stats|bytes|none, got {salt_mode!r}")
         self.salt_mode = salt_mode
@@ -322,8 +317,14 @@ class ValidationRun:
 
         # At 10^12 scale partition_id is the Iceberg partition column and this
         # filter is partition pruning; locally it's a pushed-down predicate.
+        # Transcripts are filtered the same way: a transcript whose clip
+        # hashes outside this run is not a referential violation of it.
         if done or limit_partitions is not None:
             clips = clips.filter(F.col("partition_id").isin(pending))
+            if transcripts is not None:
+                transcripts = with_partition_id(transcripts, self.n_partitions).filter(
+                    F.col("partition_id").isin(pending)
+                )
 
         # One decode pass; every scalar column rides through the UDF so
         # NOTHING downstream ever rescans clips — after this point the wide
@@ -577,63 +578,46 @@ class ValidationRun:
         )
         return [s[0] for s in row_specs + key_specs], violations
 
-    def _read_baseline(self) -> tuple[list, list | None] | None:
+    def _read_baseline(self) -> tuple[list, list] | None:
         """Collected (baseline_hist, baseline_meta) rows; None without a
-        baseline, meta None for a pre-meta baseline."""
+        baseline_hist (write_baseline writes meta first, so a crash between
+        its two writes leaves no baseline). A missing meta reads as no rows,
+        which :meth:`_drift` refuses like any other id mismatch."""
         if not self.io.exists(self.spark, "baseline_hist"):
             return None
         hist = self.io.read(self.spark, "baseline_hist").collect()
         if not self.io.exists(self.spark, "baseline_meta"):
-            return hist, None
+            return hist, []
         return hist, self.io.read(self.spark, "baseline_meta").collect()
 
     def _drift(self, stats: DataFrame, baseline) -> list[dict] | None:
-        """PSI + binned-KS per baseline column vs ``baseline`` (from
+        """PSI + binned-KS rows per baseline column vs ``baseline`` (from
         :meth:`_read_baseline`). Current histograms are binned with the
         BASELINE's persisted edges (baseline_meta) — all numeric columns in
         one scan of the stats cache. The histogram aggregations run
         distributed; the comparison is ≤ nbins+2 rows per column, so it is
-        computed driver-side (drift_from_hist_rows) instead of as two join
-        DAGs. Pre-meta baselines (dur_ms only, fixed edges) keep working via
-        the legacy fallback."""
+        computed driver-side (drift_from_hist_rows) instead of as a Spark
+        job."""
         if baseline is None:
             return None
         base_rows, meta_rows = baseline
-        if meta_rows is not None:
-            hist_ids = {r["baseline_id"] for r in base_rows if "baseline_id" in r.__fields__}
-            meta_ids = {r["baseline_id"] for r in meta_rows if "baseline_id" in r.__fields__}
-            # ANY asymmetry is a mismatch — including one table stamped and
-            # the other pre-stamping-era (a new-code write_baseline that
-            # crashed after meta left exactly that state).
-            if (hist_ids or meta_ids) and hist_ids != meta_ids:
-                raise RuntimeError(
-                    "baseline_hist/baseline_meta carry different baseline_ids "
-                    f"({hist_ids or '{legacy}'} vs {meta_ids or '{legacy}'}) — "
-                    "write_baseline crashed between its two table writes; "
-                    "re-run write_baseline"
-                )
-            specs = {
-                r["column"]: (r["lo"], r["hi"], r["nbins"])
-                for r in meta_rows
-                if r["nbins"] > 0
-            }
-            cur = histograms_multi(stats, specs)
-            for r in meta_rows:
-                if r["nbins"] == 0:  # categorical (stable-hash buckets)
-                    cur = cur.unionByName(categorical_histogram(stats, r["column"]))
-            cur_rows = cur.collect()
-        else:
-            cur_rows = histogram(
-                stats, "dur_ms", lo=0.0, hi=16000.0, nbins=DUR_HIST_BINS
-            ).collect()
-        return [
-            {
-                **d,
-                "psi_passed": d["psi"] <= self.psi_threshold,
-                "ks_passed": d["ks_d"] <= self.ks_threshold,
-            }
-            for d in drift_from_hist_rows(cur_rows, base_rows)
-        ]
+        hist_ids = {r["baseline_id"] for r in base_rows if "baseline_id" in r.__fields__}
+        meta_ids = {r["baseline_id"] for r in meta_rows if "baseline_id" in r.__fields__}
+        # both tables stamped by ONE write_baseline, or the bucket ids may
+        # mean different intervals (a crash between its two writes)
+        if len(hist_ids) != 1 or hist_ids != meta_ids:
+            raise RuntimeError(
+                "baseline_hist/baseline_meta carry different baseline_ids "
+                f"({hist_ids or '{none}'} vs {meta_ids or '{none}'}) — "
+                "write_baseline crashed between its two table writes; "
+                "re-run write_baseline"
+            )
+        specs = {r["column"]: (r["lo"], r["hi"], r["nbins"]) for r in meta_rows if r["nbins"] > 0}
+        cur = histograms_multi(stats, specs)
+        for r in meta_rows:
+            if r["nbins"] == 0:  # categorical (stable-hash buckets)
+                cur = cur.unionByName(categorical_histogram(stats, r["column"]))
+        return drift_from_hist_rows(cur.collect(), base_rows)
 
 
 def summarize(result: RunResult) -> str:

@@ -3,7 +3,6 @@ from data_profiler_spark.profiling.profile import (  # noqa: F401
     column_profile_collected,
     categorical_histogram,
     fences_from_profile,
-    histogram,
     histograms_multi,
     outlier_counts,
     top_freq,

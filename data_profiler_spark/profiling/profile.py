@@ -15,8 +15,9 @@ table, regardless of column count:
   approx quantiles (Greenwald-Khanna sketch, the "t-digest-style" north-star
   requirement — mergeable, bounded-error) for every column at once. Map-side
   partial aggregation means the shuffle carries sketches, not rows.
-- pass 2 (:func:`outlier_counts` + :func:`histogram`): fence-dependent
-  conditional counts and width_bucket histograms, again one fused ``agg``.
+- pass 2 (:func:`outlier_counts` + :func:`histograms_multi`):
+  fence-dependent conditional counts and width_bucket histograms, again one
+  fused ``agg``.
 
 Both support an optional grouping column, which is how per-partition
 profiles are computed (one shuffle keyed by partition — no driver loop).
@@ -228,47 +229,12 @@ def outlier_counts(
     return wide.select(*keep, F.expr(stack_expr))
 
 
-def histogram(
-    df: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    nbins: int = 20,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Equi-width histogram via width_bucket — HISTOGRAM_SCHEMA rows.
-
-    Bucket 0 = underflow, nbins+1 = overflow (width_bucket semantics), so a
-    drifted distribution cannot silently fall off the histogram. This is the
-    Describer's px.histogram (data_profiler.py:582-588) and the PSI input.
-    """
-    group_cols = group_cols or []
-    if hi <= lo:
-        hi = lo + 1.0
-    width = (hi - lo) / nbins
-    b = F.width_bucket(F.col(column).cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(nbins))
-    out = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(*group_cols, b.cast("int").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .select(
-            *[F.col(g) for g in group_cols],
-            F.lit(column).alias("column"),
-            F.col("bucket"),
-            (F.lit(lo) + (F.col("bucket") - 1) * F.lit(width)).alias("lo"),
-            (F.lit(lo) + F.col("bucket") * F.lit(width)).alias("hi"),
-            F.col("count"),
-        )
-    )
-    return out
-
-
 def categorical_histogram(df: DataFrame, column: str) -> DataFrame:
     """HISTOGRAM_SCHEMA rows for a CATEGORICAL column: bucket = stable hash
     of the value (pmod(xxhash64, 2^31−2) + 1; nulls → bucket 0), lo/hi null.
 
     Current and baseline frames built with this share bucket ids per
-    category, so the PSI histogram-join pipeline scores category-mix shift
+    category, so the PSI histogram pipeline scores category-mix shift
     (e.g. codec mix) with no code change. Caveat: a 31-bit hash collision
     between two distinct categories merges their buckets, masking mix
     drift between exactly those two categories (birthday bound: ~1e-6 at
@@ -303,10 +269,12 @@ def histograms_multi(
     ``specs``: column → (lo, hi, nbins), each column binned with its own
     edges but all counted in a single pass — each row explodes into one
     (column, bucket) entry per non-null spec column, then one groupBy. N
-    separate :func:`histogram` calls would scan the table N times; at
-    10^12 rows the scan IS the cost, so the drift path (dur_ms, decoded_ms,
-    rms) uses this. Output is HISTOGRAM_SCHEMA, identical per column to what
-    :func:`histogram` produces with the same edges.
+    per-column histogram passes would scan the table N times; at 10^12 rows
+    the scan IS the cost, so the drift path (dur_ms, decoded_ms, rms) uses
+    this. Output is HISTOGRAM_SCHEMA: bucket 0 = underflow, nbins+1 =
+    overflow (width_bucket semantics), so a drifted distribution cannot
+    silently fall off the histogram — the Describer's px.histogram
+    (data_profiler.py:582-588) and the PSI input.
 
     Buckets are materialized behind a projection boundary before the
     explode — Catalyst re-inlines referenced subtrees per use site, so

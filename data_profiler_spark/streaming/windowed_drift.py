@@ -13,16 +13,19 @@ value is the stream lifecycle itself):
     readStream ──watermark──► groupBy(window(ts), width_bucket(value))
                ──append mode──► foreachBatch:
                    closed-window bucket counts (HISTOGRAM rows + window)
-                   ⋈ baseline replicated per window   (≤ nbins × windows)
-                   → psi / ks_binned (group_cols=[window_start])
+                   ∪ baseline replicated per window   (≤ nbins × windows)
+                   → pair_histograms → drift_paired
+                     (group_cols=[window_start, window_end])
                    → io.append(table)
 
 Scale notes: the stream state is O(open windows × buckets) thanks to the
-watermark; a batch's drift math joins two ≤(nbins+2)×windows-row frames —
-metadata at any data scale. Append output mode means each window is scored
-exactly once, when it closes; a replayed batch re-appends the same rows
-keyed by the same window (dedupe on read via the window key if the sink
-table must be strictly unique).
+watermark; a batch's drift math pairs two ≤(nbins+2)×windows-row frames in
+one groupBy and scores them in one window pass — metadata at any data
+scale. Scores and verdicts follow drift.py's rules (PSI_THRESHOLD,
+KS_THRESHOLD; an empty side scores NULL and fails). Append output mode
+means each window is scored exactly once, when it closes; a replayed batch
+re-appends the same rows keyed by the same window (dedupe on read via the
+window key if the sink table must be strictly unique).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_profiler_spark.drift.drift import ks_binned, psi
+from data_profiler_spark.drift.drift import drift_paired, pair_histograms
 from data_profiler_spark.sources.tableio import ParquetTableIO, TableIO
 
 
@@ -49,8 +52,6 @@ def windowed_drift_stream(
     nbins: int = 20,
     window_size: str = "1 minute",
     watermark_delay: str = "2 minutes",
-    psi_threshold: float = 0.25,
-    ks_threshold: float = 0.2,
     io: TableIO | None = None,
     table: str = "window_drift",
     timeout_sec: float | None = None,
@@ -98,22 +99,17 @@ def windowed_drift_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():  # no window closed this batch
             return
-        windows = batch_df.select("window_start", "window_end").distinct()
-        base_w = base.crossJoin(F.broadcast(windows))
-        keys = ["column", "window_start", "window_end"]
-        p = psi(batch_df, base_w, group_cols=["window_start", "window_end"])
-        k = ks_binned(batch_df, base_w, group_cols=["window_start", "window_end"])
-        out = (
-            p.join(k, keys)
-            .select(
-                "window_start",
-                "window_end",
-                "column",
-                F.round("psi", 6).alias("psi"),
-                F.round("ks_d", 6).alias("ks_d"),
-                (F.col("psi") < psi_threshold).alias("psi_passed"),
-                (F.col("ks_d") < ks_threshold).alias("ks_passed"),
-            )
+        group = ["window_start", "window_end"]
+        base_w = base.crossJoin(F.broadcast(batch_df.select(*group).distinct()))
+        out = drift_paired(
+            pair_histograms(batch_df, base_w, ["column", *group]), group
+        ).select(
+            *group,
+            "column",
+            F.round("psi", 6).alias("psi"),
+            F.round("ks_d", 6).alias("ks_d"),
+            "psi_passed",
+            "ks_passed",
         )
         io.append(out, table)
 

@@ -21,6 +21,27 @@ def spark():
 
 
 @pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn(), jobs, stages): the Spark jobs ``fn`` ran
+    outside any job group — every job the engine submits — and their stages,
+    skipped ones included (read from ``sc.statusTracker()``, so it works
+    with the UI off)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # the tracker is fed through it
+    tracker = sc.statusTracker()
+
+    def count(fn):
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        out = fn()
+        bus.waitUntilEmpty()
+        new = set(tracker.getJobIdsForGroup()) - before
+        return out, len(new), sum(len(tracker.getJobInfo(j).stageIds) for j in new)
+
+    return count
+
+
+@pytest.fixture()
 def tmp_io():
     from data_profiler_spark.sources.tableio import ParquetTableIO
 

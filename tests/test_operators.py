@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_profiler_spark.checks.constraints import row_level_violations
-from data_profiler_spark.drift.drift import drift_from_hist_rows, ks_binned, psi
+from data_profiler_spark.drift.drift import drift_from_hist_rows, drift_paired, pair_histograms
 from data_profiler_spark.operators import dedup, multimodal, similarity, textops
 
 DOCS = [
@@ -165,13 +165,6 @@ def test_cosine_topk_matches_numpy(embeddings):
     assert top["cosine"] == pytest.approx(sims[expect[0]], abs=2e-6)
 
 
-def test_lsh_topk_finds_near_identical(embeddings):
-    df, _ = embeddings
-    planes = [[float(((7 * p + 13 * j) % 11) - 5) for j in range(8)] for p in range(2)]
-    got = similarity.lsh_topk(df, df.filter(F.col("vec_id") == 0), planes, k=3).collect()
-    assert any(r["vec_id"] == 5 for r in got)  # near-identical shares all sign bits
-
-
 def test_embedding_neardup_pairs(embeddings):
     df, _ = embeddings
     pairs = similarity.embedding_neardup_pairs(df, threshold=0.999).collect()
@@ -210,11 +203,11 @@ def test_drift_from_hist_rows_matches_spark_ops(spark):
                                    "column string, bucket int, count long")
     base_df = spark.createDataFrame([(r["column"], r["bucket"], r["count"]) for r in base],
                                     "column string, bucket int, count long")
-    spark_psi = psi(cur_df, base_df).collect()[0]["psi"]
-    spark_ks = ks_binned(cur_df, base_df).collect()[0]["ks_d"]
+    got = drift_paired(pair_histograms(cur_df, base_df, ["column"])).collect()[0]
     local = drift_from_hist_rows(cur, base)[0]
-    assert local["psi"] == pytest.approx(spark_psi, rel=1e-9)
-    assert local["ks_d"] == pytest.approx(spark_ks, rel=1e-9)
+    assert local["psi"] == pytest.approx(got["psi"], rel=1e-9)
+    assert local["ks_d"] == pytest.approx(got["ks_d"], rel=1e-9)
+    assert (local["psi_passed"], local["ks_passed"]) == (got["psi_passed"], got["ks_passed"])
 
 
 def test_media_decode_stats_exact(spark):

@@ -151,3 +151,26 @@ def test_corpus_plan_is_scale_shaped(spark, name):
                 f"exception list) — first lines:\n"
                 + "\n".join(plan.splitlines()[:25])
             )
+
+
+# Spark jobs and stages (skipped ones included) of one drift_scores collect
+# at sf0.001. Before the one drift core (four paired PSI/KS calls) it ran
+# 16 jobs and 36 stages. A budget may only go down; raising it needs a
+# CHANGES.md line saying why.
+DRIFT_SCORES_JOB_BUDGET = 11
+DRIFT_SCORES_STAGE_BUDGET = 22
+
+
+def test_drift_scores_job_and_stage_budget(spark, count_jobs):
+    from data_profiler_spark.functions.windows import release_cumsum_caches
+
+    fn, _ = CORPUS["drift_scores"]
+    try:
+        rows, jobs, stages = count_jobs(lambda: fn(spark, SF_DIR).collect())
+    finally:
+        release_cumsum_caches()
+    assert len(rows) > 0
+    assert jobs <= DRIFT_SCORES_JOB_BUDGET, f"{jobs} jobs > budget {DRIFT_SCORES_JOB_BUDGET}"
+    assert stages <= DRIFT_SCORES_STAGE_BUDGET, (
+        f"{stages} stages > budget {DRIFT_SCORES_STAGE_BUDGET}"
+    )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from data_profiler_spark.profiling import (
     column_profile,
     fences_from_profile,
-    histogram,
+    histograms_multi,
     outlier_counts,
     top_freq,
 )
@@ -86,7 +86,7 @@ def test_fences_and_outliers_match_reference_formula(sdf, pdf):
 
 def test_histogram_matches_numpy(sdf, pdf):
     lo, hi, nb = 0.0, 100.0, 10
-    rows = histogram(sdf, "y", lo, hi, nb).collect()
+    rows = histograms_multi(sdf, {"y": (lo, hi, nb)}).collect()
     got = {r["bucket"]: r["count"] for r in rows}
     y = pdf["y"].to_numpy()
     width = (hi - lo) / nb
@@ -118,11 +118,10 @@ def test_grouped_profile(sdf, pdf):
         assert got[(g, "mean")] == pytest.approx(grp["y"].mean())
 
 
-def test_histograms_multi_matches_per_column(sdf):
-    """One-scan multi-column histograms == N independent histogram() calls
-    (same edges), including under/overflow buckets and lo/hi edge values."""
-    from data_profiler_spark.profiling import histograms_multi
-
+def test_histograms_multi_matches_per_column(sdf, pdf):
+    """One-scan multi-column histograms == a per-column numpy width_bucket
+    reference (same edges), including under/overflow buckets, lo/hi edge
+    values and each bucket's interval."""
     specs = {"x": (0.0, 200.0, 8), "y": (-5.0, 100.0, 10)}
     multi = {
         (r["column"], r["bucket"]): (r["count"], round(r["lo"], 9), round(r["hi"], 9))
@@ -130,6 +129,9 @@ def test_histograms_multi_matches_per_column(sdf):
     }
     single = {}
     for c, (lo, hi, nb) in specs.items():
-        for r in histogram(sdf, c, lo, hi, nb).collect():
-            single[(c, r["bucket"])] = (r["count"], round(r["lo"], 9), round(r["hi"], 9))
+        v = pdf[c].dropna().to_numpy()
+        b = np.where(v < lo, 0, np.where(v >= hi, nb + 1, np.floor(nb * (v - lo) / (hi - lo)) + 1))
+        w = (hi - lo) / nb
+        for k, n in zip(*np.unique(b.astype(int), return_counts=True)):
+            single[(c, int(k))] = (int(n), round(lo + (k - 1) * w, 9), round(lo + k * w, 9))
     assert multi == single

@@ -178,11 +178,13 @@ def test_wav_sample_rate_walks_any_chunk_layout(pcm, sr, pre_chunks):
 )
 @settings(max_examples=15, deadline=None)
 def test_histograms_multi_equals_per_column_histogram(spark, edges, values):
-    """One-scan multi-column binning ≡ N independent histogram() calls for
-    arbitrary edges and data (the equivalence the drift gate rests on)."""
+    """One-scan multi-column binning ≡ a per-column numpy width_bucket
+    reference for arbitrary edges and data (the binning the drift gate
+    rests on): 0 below lo, nbins+1 at/above hi, else
+    floor(nbins·(v−lo)/(hi−lo)) + 1, evaluated in that order as Spark does."""
     import pandas as pd
 
-    from data_profiler_spark.profiling import histogram, histograms_multi
+    from data_profiler_spark.profiling import histograms_multi
 
     cols = [f"c{i}" for i in range(len(edges))]
     pdf = pd.DataFrame({c: pd.Series(values, dtype="float64") for c in cols})
@@ -195,7 +197,9 @@ def test_histograms_multi_equals_per_column_histogram(spark, edges, values):
         for r in histograms_multi(df, specs).collect()
     }
     single = {}
+    v = np.asarray(values, dtype=np.float64)
     for c, (lo, hi, nb) in specs.items():
-        for r in histogram(df, c, lo, hi, nb).collect():
-            single[(c, r["bucket"])] = r["count"]
+        b = np.where(v < lo, 0, np.where(v >= hi, nb + 1, np.floor(nb * (v - lo) / (hi - lo)) + 1))
+        for k, n in zip(*np.unique(b.astype(int), return_counts=True)):
+            single[(c, int(k))] = int(n)
     assert multi == single

@@ -158,6 +158,29 @@ def test_resume_from_manifest(spark, tmp_io):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_partial_run_scores_only_its_own_transcripts(spark, tmp_io, corrupted):
+    """A run over some partitions checks transcript_has_clip against the
+    transcripts of THOSE partitions only: a transcript whose clip hashes
+    to a partition outside the run is not a violation of this run. Its
+    violation rows therefore match its verdict counts and stay inside
+    partitions_processed."""
+    clips, tr = corrupted
+    run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
+    res = run.run(clips, transcripts=tr, limit_partitions=3)
+    try:
+        assert len(res.partitions_processed) == 3
+        rows = res.violations.filter("check_name = 'transcript_has_clip'").collect()
+        counted = (
+            res.verdicts.filter("check_name = 'transcript_has_clip'")
+            .agg(F.sum("violation_count"))
+            .collect()[0][0]
+        )
+        assert rows and len(rows) == counted
+        assert {r["partition_id"] for r in rows} <= set(res.partitions_processed)
+    finally:
+        res.violations.unpersist()
+
+
 def test_manifest_snapshot_lineage(spark, tmp_io):
     clips = fixtures.generate_clips(spark, 80, seed=SEED)
     run = ValidationRun(spark, tmp_io, n_partitions=4)
@@ -248,7 +271,10 @@ def test_histograms_multi_empty_specs_returns_empty_frame(spark):
 def test_mixed_generation_baseline_tables_also_refuse(spark, tmp_io):
     """One stamped table + one pre-stamping-era table is the exact state a
     crashed new-code write_baseline leaves over a legacy baseline — must
-    raise, not silently mis-bin."""
+    raise, not silently mis-bin. A baseline_hist with no baseline_meta at
+    all (no edges to bin with) refuses the same way."""
+    import shutil
+
     import pytest
 
     clips = fixtures.generate_clips(spark, 80, seed=SEED)
@@ -261,6 +287,10 @@ def test_mixed_generation_baseline_tables_also_refuse(spark, tmp_io):
         rows, "column string, bucket int, lo double, hi double, count long"
     )
     tmp_io.overwrite(legacy, "baseline_hist")
+    with pytest.raises(RuntimeError, match="baseline_id"):
+        run.run(clips)
+    run.write_baseline(clips)
+    shutil.rmtree(f"{tmp_io.root}/baseline_meta")
     with pytest.raises(RuntimeError, match="baseline_id"):
         run.run(clips)
 
@@ -333,26 +363,12 @@ def test_snapshot_baseline_shares_one_decode(spark, tmp_io, monkeypatch):
 RUN_JOB_BUDGET = 15
 
 
-def _jobs_of(spark, fn):
-    """``fn()`` and the number of Spark jobs it ran: the jobs outside any
-    job group, which is every job the engine submits (works with the UI
-    off)."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()  # the tracker is fed through it
-    tracker = sc.statusTracker()
-    bus.waitUntilEmpty()
-    before = set(tracker.getJobIdsForGroup())
-    out = fn()
-    bus.waitUntilEmpty()
-    return out, len(set(tracker.getJobIdsForGroup()) - before)
-
-
-def test_run_job_budget_and_phases(spark, tmp_io):
+def test_run_job_budget_and_phases(spark, tmp_io, count_jobs):
     corr = fixtures.Corruptions(null_clip_id_every=47, duplicate_clip_id_every=31)
     clips = fixtures.generate_clips(spark, 200, seed=SEED, corruptions=corr)
     tr = fixtures.generate_transcripts(spark, 200, seed=SEED, orphan_every=61, missing_every=71)
     run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
-    res, jobs = _jobs_of(spark, lambda: run.run(clips, transcripts=tr))
+    res, jobs, _stages = count_jobs(lambda: run.run(clips, transcripts=tr))
     try:
         assert res.rows == 200
         assert jobs <= RUN_JOB_BUDGET, f"{jobs} jobs > budget {RUN_JOB_BUDGET}"

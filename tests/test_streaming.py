@@ -243,11 +243,13 @@ def test_windowed_drift_scores_closed_windows(spark, dirs):
     """§2.9 composition: every CLOSED event-time window is scored PSI/KS
     against the persisted baseline histogram, distributed end-to-end (the
     foreachBatch sink never collects). A same-distribution window passes;
-    a shifted window fails PSI."""
+    a shifted window fails PSI; a window whose KS sits exactly at its
+    threshold passes it (drift.py's <= rule, shared with the batch paths)."""
     import datetime as dt
     import time as _time
 
-    from data_profiler_spark.profiling import histogram
+    from data_profiler_spark.drift import KS_THRESHOLD
+    from data_profiler_spark.profiling import histograms_multi
     from data_profiler_spark.streaming.windowed_drift import windowed_drift_stream
 
     in_dir, cp = dirs
@@ -260,7 +262,7 @@ def test_windowed_drift_scores_closed_windows(spark, dirs):
     base_df = spark.range(200).select(
         F.col("id"), (F.col("id") % 10).cast("double").alias("value")
     )
-    baseline = histogram(base_df, "value", lo=0.0, hi=10.0, nbins=10)
+    baseline = histograms_multi(base_df, {"value": (0.0, 10.0, 10)})
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     m = dt.timedelta(minutes=1)
@@ -273,17 +275,22 @@ def test_windowed_drift_scores_closed_windows(spark, dirs):
         )
 
     # window 12:00 = same distribution; window 12:01 = shifted mass (all 9s);
-    # a 12:10 row advances the watermark past both
+    # window 12:02 = values 2..9 only, two of them 2s: its CDF trails the
+    # baseline's by exactly 40/200 = 0.2 at value 1; a 12:10 row advances
+    # the watermark past all three
     rows = [(i, t0 + dt.timedelta(seconds=i % 50), float(i % 10)) for i in range(100)]
     rows += [(1000 + i, t0 + m, 9.0) for i in range(40)]
+    rows += [(1500 + i, t0 + 2 * m, float(v)) for i, v in enumerate([2, 2, 2, 3, 4, 5, 6, 7, 8, 9])]
     rows += [(2000, t0 + 10 * m, 5.0)]
     land(rows)
     out = {str(r["window_start"]): r for r in run().collect()}
     assert str(t0) in out and str(t0 + m) in out
-    same, shifted = out[str(t0)], out[str(t0 + m)]
+    same, shifted, at_ks = out[str(t0)], out[str(t0 + m)], out[str(t0 + 2 * m)]
     assert same["psi_passed"] and same["ks_passed"] and same["psi"] < 0.05
     assert not shifted["psi_passed"] and shifted["psi"] > 1.0
     assert not shifted["ks_passed"]
+    assert at_ks["ks_d"] == KS_THRESHOLD and at_ks["ks_passed"]
+    assert not at_ks["psi_passed"]
 
     _time.sleep(1.1)
     # second drain on the same checkpoint: the 12:10 window closes once a
