@@ -16,10 +16,8 @@ Scale notes (100TB / 10^12 clips):
   cost-balanced — shuffling the payload to "balance" it would push the full
   dataset through shuffle disks. ``salt_repartition`` (deterministic
   ``pmod(xxhash64(clip_id))`` — no rand(); resume must be stable, SURVEY.md
-  §7) is applied to the decoded stats frame (~0.03% of input bytes), or to
-  the payload itself via ``ValidationRun(salt_mode="bytes")`` when equal-byte
-  splits hide real decode-cost skew (codec-clustered files); AQE handles
-  residual skew at shuffle boundaries.
+  §7) is applied to the decoded stats frame (~0.03% of input bytes) only;
+  AQE handles residual skew at shuffle boundaries.
 - stats are fixed-width per clip → output is tiny relative to input, so the
   expensive `bytes` column never crosses a shuffle.
 """

@@ -144,54 +144,6 @@ def check_referential(
     return _violations(orphans, name, key, F.lit(detail))
 
 
-def check_value_range(
-    df: DataFrame,
-    column: str,
-    lo: float | None = None,
-    hi: float | None = None,
-    key: str = "clip_id",
-    name: str | None = None,
-) -> DataFrame:
-    """Numeric bound check (Describer's negative/outlier counting made a
-    constraint — data_profiler.py:541-562)."""
-    name = name or f"range_{column}"
-    cond = F.lit(False)
-    if lo is not None:
-        cond = cond | (F.col(column) < lo)
-    if hi is not None:
-        cond = cond | (F.col(column) > hi)
-    bad = df.filter(F.col(column).isNotNull() & cond)
-    detail = F.concat(F.lit(f"{column} out of range: "), F.col(column).cast("string"))
-    return _violations(bad, name, key, detail)
-
-
-def check_decodable(clip_stats: DataFrame, name: str = "audio_decodable") -> DataFrame:
-    """Clips whose payload failed to decode (stats from audio.decode_stats)."""
-    bad = clip_stats.filter(~F.col("decode_ok"))
-    return _violations(bad, name, "clip_id", F.coalesce(F.col("decode_err"), F.lit("decode failed")))
-
-
-def check_dur_consistency(
-    clip_stats: DataFrame,
-    tol_ms: float = 5.0,
-    name: str = "dur_ms_consistent",
-) -> DataFrame:
-    """|dur_ms − decoded_ms| ≤ tol for decodable clips.
-
-    Input: clip_stats joined with dur_ms (runner provides both columns).
-    """
-    bad = clip_stats.filter(
-        F.col("decode_ok") & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > tol_ms)
-    )
-    detail = F.concat(
-        F.lit("declared dur_ms="),
-        F.col("dur_ms").cast("string"),
-        F.lit(" decoded_ms="),
-        F.round("decoded_ms", 1).cast("string"),
-    )
-    return _violations(bad, name, "clip_id", detail)
-
-
 def check_schema(df: DataFrame, expected, name: str = "schema_conformance") -> tuple[bool, list[str]]:
     """Driver-side header/type validation — the analog of the reference's
     required/unexpected column checks (data_file_functions.py:42-54).

@@ -185,9 +185,14 @@ def decode_avi(payload: bytes, fmt: str = "avi") -> tuple[np.ndarray, float]:
                             scale, rate = struct.unpack_from(
                                 "<II", payload, s2body + 20
                             )
-                        elif (
-                            s2 == b"strf" and stream_type == b"vids" and s2size >= 40
-                        ):
+                        elif s2 == b"strf" and stream_type == b"vids":
+                            # same floor as the strh: a short video strf
+                            # must not fall back to avih dimensions with
+                            # bpp and compression never checked
+                            if s2size < 40:
+                                raise ValueError(
+                                    f"avi: video strf chunk too short ({s2size} bytes)"
+                                )
                             biw, bih = struct.unpack_from("<ii", payload, s2body + 4)
                             _, bpp = struct.unpack_from("<HH", payload, s2body + 12)
                             comp = struct.unpack_from("<I", payload, s2body + 16)[0]

@@ -1,26 +1,28 @@
-"""Resumable per-partition manifest.
+"""Resumable per-partition manifest — the engine's only commit record.
 
 The reference only gestures at this: "keep track … pick up where it left
 off. For now, just delete" (/root/reference/data_profiler/services/
 transform_service.py:213-214) and instead runs a compensating delete on
 failure (data_profiler.py:374-379). Here it is real: one manifest row per
 completed logical partition — (partition_id, snapshot_id, status, rows,
-metrics_json, wall_ms) — and a restart anti-joins pending partitions against
-completed ones (the same J7 left_anti pattern the engine uses for
-referential integrity, turned on ourselves; SURVEY.md §4.3).
+metrics_json, wall_ms) — and a restart skips the partitions it names.
 
 Output tables written by an interrupted run carry its snapshot_id; since
 the manifest row for a partition is committed only *after* its outputs, a
-crash leaves orphan output rows that are filtered out at read time by
-joining on manifest snapshot ids — i.e. reads are snapshot-consistent
-without any compensating delete.
+crash leaves orphan output rows that reads drop by a left-semi join on the
+manifest's snapshot ids (:meth:`Manifest.committed`) — i.e. reads are
+snapshot-consistent without any compensating delete. Every "what is
+committed?" question (resume set, committed reads, stream replay guard) is
+one read of the done rows (:meth:`Manifest._done`); the table IO keeps no
+lineage of its own.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from data_profiler_spark.functions.frames import local_frame
 from data_profiler_spark.schemas import MANIFEST_SCHEMA
@@ -40,48 +42,39 @@ class Manifest:
         self.spark = spark
         self.table = table
 
+    def _done(self) -> DataFrame | None:
+        """The committed (status 'done') manifest rows; None before any
+        commit, so an absent table costs no Spark job."""
+        if not self.io.exists(self.spark, self.table):
+            return None
+        return self.io.read(self.spark, self.table).filter("status = 'done'")
+
     def completed_partitions(self) -> set[int]:
-        if not self.io.exists(self.spark, self.table):
+        """Logical partitions a run has committed — the resume skip set."""
+        done = self._done()
+        if done is None:
             return set()
-        rows = (
-            self.io.read(self.spark, self.table)
-            .filter("status = 'done'")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return {r[0] for r in rows}
+        return {r[0] for r in done.select("partition_id").distinct().collect()}
 
-    def completed_snapshot_ids(self) -> set[str]:
-        if not self.io.exists(self.spark, self.table):
-            return set()
-        rows = (
-            self.io.read(self.spark, self.table)
-            .filter("status = 'done'")
-            .select("snapshot_id")
-            .distinct()
-            .collect()
-        )
-        return {r[0] for r in rows}
+    def committed(self, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` (an output table) whose ``snapshot_id`` a done
+        manifest row names: a left-semi join, so the plan is the same size
+        however many runs have committed. No rows before any commit."""
+        done = self._done()
+        if done is None:
+            return df.limit(0)
+        return df.join(done.select("snapshot_id"), "snapshot_id", "left_semi")
 
-    def completed_batch_ids(self) -> set[int]:
-        """Stream idempotence: batch ids recorded in metrics_json by
-        validate_stream — a micro-batch replayed after a crash that already
-        committed its manifest rows is skipped instead of re-appended."""
-        if not self.io.exists(self.spark, self.table):
-            return set()
-        rows = (
-            self.io.read(self.spark, self.table)
-            .filter("status = 'done'")
-            .select("metrics_json")
-            .collect()
-        )
-        out: set[int] = set()
-        for r in rows:
-            b = json.loads(r[0] or "{}").get("stream_batch_id")
-            if b is not None:
-                out.add(int(b))
-        return out
+    def has_batch(self, batch_id: int) -> bool:
+        """Stream idempotence: whether a done row records ``batch_id`` as its
+        ``stream_batch_id`` (validate_stream's extra metric) — a micro-batch
+        replayed after a crash that already committed its manifest rows is
+        skipped instead of re-appended. One filtered existence query."""
+        done = self._done()
+        if done is None:
+            return False
+        batch = F.get_json_object("metrics_json", "$.stream_batch_id")
+        return not done.filter(batch == str(int(batch_id))).isEmpty()
 
     def commit(
         self,

@@ -71,6 +71,8 @@ KLL_K = 200
 KLL_RANK_ERROR = 0.0133
 PROFILE_DDL = "partition_id int, column string, metric string, value double"
 DUR_HIST_BINS = 40
+# |dur_ms - decoded_ms| above this fails dur_ms_consistent
+DUR_TOL_MS = 5.0
 # Numeric profile columns the drift gate scores (PSI + binned-KS per
 # column vs the baseline snapshot). dur_ms is declared metadata; decoded_ms
 # and rms come out of the decode pass — a baseline snapshot is therefore a
@@ -106,32 +108,11 @@ class ValidationRun:
         spark: SparkSession,
         io: TableIO,
         n_partitions: int = 32,
-        dur_tol_ms: float = 5.0,
-        salt_mode: str = "stats",
         manifest_table: str = "manifest",
     ):
-        """``salt_mode`` picks WHERE the anti-skew salt shuffle happens:
-
-        - ``"stats"`` (default): decode map-side straight off the scan —
-          the `bytes` column NEVER crosses a shuffle — then salt-repartition
-          the decoded stats frame (≈30 bytes/row, ~0.03% of the input) so
-          every downstream pass sees balanced row counts. At 10^12 clips a
-          payload shuffle is ~the full 100TB through shuffle disks; scan
-          splits are already byte-proportional (`maxPartitionBytes`), and for
-          PCM decode cost ∝ bytes, so map-side decode is inherently balanced.
-        - ``"bytes"``: salt the raw payload BEFORE decode. Only worth it for
-          adversarially ordered inputs where decode cost per byte varies
-          wildly (e.g. file groups clustered by a high-compression codec so
-          equal-byte splits hide 10× decoded-duration differences).
-        - ``"none"``: no explicit salt (tests / pre-balanced input).
-        """
         self.spark = spark
         self.io = io
         self.n_partitions = n_partitions
-        self.dur_tol_ms = dur_tol_ms
-        if salt_mode not in ("stats", "bytes", "none"):
-            raise ValueError(f"salt_mode must be stats|bytes|none, got {salt_mode!r}")
-        self.salt_mode = salt_mode
         self.manifest = Manifest(io, spark, table=manifest_table)
 
     # -- committed reads -----------------------------------------------------
@@ -142,11 +123,10 @@ class ValidationRun:
         ordering), so a killed run — or a replayed streaming micro-batch —
         leaves orphan rows carrying a snapshot id the manifest never
         recorded. Every read of verdicts/violations/profile/sketches/drift
-        must go through this filter; the committed-id set is one id per
-        completed run (bounded), so the isin folds to an IN-list pushed to
-        the scan."""
-        snaps = sorted(self.manifest.completed_snapshot_ids())
-        return self.io.read(self.spark, table).filter(F.col("snapshot_id").isin(snaps))
+        must go through this filter: a left-semi join with the manifest's
+        done rows (Manifest.committed), so neither the plan nor the driver
+        grows with the number of committed runs."""
+        return self.manifest.committed(self.io.read(self.spark, table))
 
     # -- cross-run quantiles from persisted sketches -------------------------
     def global_quantiles(self, column: str, qs: list[float]) -> dict[float, float]:
@@ -329,20 +309,22 @@ class ValidationRun:
         # One decode pass; every scalar column rides through the UDF so
         # NOTHING downstream ever rescans clips — after this point the wide
         # `bytes` column is gone and the whole suite (checks, profile, drift)
-        # runs off one persisted stats frame. Salt placement per salt_mode
-        # (see __init__): default decodes map-side and salts only the tiny
-        # stats frame, so the payload never crosses a shuffle.
-        width = self.spark.sparkContext.defaultParallelism * 2
-        selected = clips.select(
-            "clip_id", "bytes", "sr_hz", "codec", "dur_ms", "transcript", "partition_id"
+        # runs off one persisted stats frame. The decode runs map-side
+        # straight off the scan, so the `bytes` column never crosses a
+        # shuffle: scan splits are already byte-proportional
+        # (`maxPartitionBytes`) and PCM decode cost is proportional to bytes.
+        # Only the decoded stats frame (≈30 bytes/row, ~0.03% of the input)
+        # is salt-repartitioned, so every downstream pass sees balanced row
+        # counts.
+        stats = salt_repartition(
+            decode_stats(
+                clips.select(
+                    "clip_id", "bytes", "sr_hz", "codec", "dur_ms", "transcript", "partition_id"
+                ),
+                passthrough=["sr_hz", "dur_ms", "codec", "transcript", "partition_id"],
+            ),
+            self.spark.sparkContext.defaultParallelism * 2,
         )
-        if self.salt_mode == "bytes":
-            selected = salt_repartition(selected, width)
-        stats = decode_stats(
-            selected, passthrough=["sr_hz", "dur_ms", "codec", "transcript", "partition_id"]
-        )
-        if self.salt_mode == "stats":
-            stats = salt_repartition(stats, width)
 
         # Everything after the decode runs under try/finally: any raising path
         # (a failed tail job, the baseline_id mismatch guard, a sink write)
@@ -533,7 +515,7 @@ class ValidationRun:
             (
                 "dur_ms_consistent",
                 F.col("decode_ok")
-                & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > self.dur_tol_ms),
+                & (F.abs(F.col("dur_ms") - F.col("decoded_ms")) > DUR_TOL_MS),
                 F.concat(
                     F.lit("declared dur_ms="),
                     F.col("dur_ms").cast("string"),

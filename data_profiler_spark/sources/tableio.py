@@ -1,40 +1,29 @@
-"""Table IO seam: Iceberg in production, parquet + snapshot manifest in tests.
+"""Table IO seam: Iceberg in production, parquet directories in tests.
 
 BASELINE.json declares Iceberg tables; this sandbox has no Iceberg runtime
 jar (verified: none in the pyspark 4.1.2 jars, no network), so all engine
 logic is written against this interface (SURVEY.md §7):
 
-- :class:`IcebergTableIO` — the production path (`format("iceberg")`,
-  snapshot IDs from table history). Import-guarded: constructing it without
-  the runtime raises with instructions rather than failing mid-job.
-- :class:`ParquetTableIO` — parquet directories plus a `_snapshots.json`
-  ledger emulating snapshot ids + lineage, so the resume manifest has real
-  snapshot semantics to test against.
+- :class:`IcebergTableIO` — the production path (`format("iceberg")`).
+  Import-guarded: constructing it without the runtime raises with
+  instructions rather than failing mid-job.
+- :class:`ParquetTableIO` — one parquet directory per table.
+
+Writes return nothing: the engine's only commit record is the resume
+manifest (plans/manifest.py), whose rows name the snapshot id each run
+stamps on its output rows. Reads trust that record, not any per-write
+table history.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import threading
+import shutil
 import uuid
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
-
-# One lock per ledger path, process-wide: ValidationRun's parallel tail
-# appends to two tables concurrently from driver threads, and several
-# ParquetTableIO instances may point at the same root. Snapshot lineage is
-# the engine's crash-safety mechanism, so the ledger read-modify-write must
-# be serialized and the file replaced atomically (tmp + os.replace), never
-# truncated in place.
-_LEDGER_LOCKS: dict[str, threading.Lock] = {}
-_LEDGER_LOCKS_GUARD = threading.Lock()
-
-
-def _ledger_lock(path: str) -> threading.Lock:
-    with _LEDGER_LOCKS_GUARD:
-        return _LEDGER_LOCKS.setdefault(os.path.abspath(path), threading.Lock())
+from pyspark.sql import functions as F
 
 
 class TableIO(ABC):
@@ -42,24 +31,23 @@ class TableIO(ABC):
     def read(self, spark: SparkSession, table: str) -> DataFrame: ...
 
     @abstractmethod
-    def append(self, df: DataFrame, table: str) -> str:
-        """Append rows; returns the commit's snapshot id."""
+    def append(self, df: DataFrame, table: str) -> None: ...
 
     @abstractmethod
-    def overwrite(self, df: DataFrame, table: str) -> str: ...
+    def overwrite(self, df: DataFrame, table: str) -> None: ...
 
     @abstractmethod
     def exists(self, spark: SparkSession, table: str) -> bool: ...
 
     @abstractmethod
-    def upsert(self, df: DataFrame, table: str, key: str) -> str:
+    def upsert(self, df: DataFrame, table: str, key: str) -> None:
         """Keyed update-or-insert — the reference's batched keyed UPDATE
         (output_tables_service.py:484-520, 1k-row batches with a "real slow"
         comment) re-expressed as one transactional merge. Iceberg: MERGE
         INTO. Parquet (test path): anti-join + union + atomic dir swap."""
 
     @abstractmethod
-    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> str:
+    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> None:
         """Predicate delete — the reference's per-project delete suite
         (resources/sql/PROD/delete/delete_from_tables_by_project_number.sql,
         child-before-parent ordering at database/helpers/constants.py:144-162).
@@ -72,75 +60,45 @@ class ParquetTableIO(TableIO):
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self._ledger = os.path.join(root, "_snapshots.json")
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _record(self, table: str, mode: str) -> str:
-        snap = uuid.uuid4().hex[:16]
-        with _ledger_lock(self._ledger):
-            entries = []
-            if os.path.exists(self._ledger):
-                with open(self._ledger) as f:
-                    entries = json.load(f)
-            entries.append({"table": table, "snapshot_id": snap, "mode": mode})
-            tmp = f"{self._ledger}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as f:
-                json.dump(entries, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._ledger)
-        return snap
-
-    def snapshots(self, table: str) -> list[dict]:
-        if not os.path.exists(self._ledger):
-            return []
-        with open(self._ledger) as f:
-            return [e for e in json.load(f) if e["table"] == table]
-
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self._path(table))
 
-    def append(self, df: DataFrame, table: str) -> str:
+    def append(self, df: DataFrame, table: str) -> None:
         df.write.mode("append").parquet(self._path(table))
-        return self._record(table, "append")
 
-    def overwrite(self, df: DataFrame, table: str) -> str:
+    def overwrite(self, df: DataFrame, table: str) -> None:
         df.write.mode("overwrite").parquet(self._path(table))
-        return self._record(table, "overwrite")
 
     def exists(self, spark: SparkSession, table: str) -> bool:
         p = self._path(table)
         return os.path.exists(p) and any(f.endswith(".parquet") for f in os.listdir(p))
 
-    def _rewrite(self, df: DataFrame, table: str, mode: str) -> str:
+    def _rewrite(self, df: DataFrame, table: str) -> None:
         """Materialize ``df`` beside the table, then atomically swap dirs —
         Spark cannot overwrite a path that feeds the very plan being
         executed (lazy scan of the old files)."""
         path = self._path(table)
         tmp, old = f"{path}__tmp_{uuid.uuid4().hex[:8]}", f"{path}__old"
         df.write.parquet(tmp)
-        import shutil
-
         if os.path.exists(path):
             os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
-        return self._record(table, mode)
 
-    def upsert(self, df: DataFrame, table: str, key: str) -> str:
+    def upsert(self, df: DataFrame, table: str, key: str) -> None:
         if not self.exists(df.sparkSession, table):
-            return self.overwrite(df, table)
+            self.overwrite(df, table)
+            return
         existing = self.read(df.sparkSession, table)
         kept = existing.join(df.select(key).distinct(), key, "left_anti")
-        return self._rewrite(kept.unionByName(df), table, "upsert")
+        self._rewrite(kept.unionByName(df), table)
 
-    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> str:
-        from pyspark.sql import functions as F
-
-        remaining = self.read(spark, table).filter(~F.expr(predicate))
-        return self._rewrite(remaining, table, "delete")
+    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> None:
+        self._rewrite(self.read(spark, table).filter(~F.expr(predicate)), table)
 
 
 class IcebergTableIO(TableIO):
@@ -168,25 +126,16 @@ class IcebergTableIO(TableIO):
     def read(self, spark: SparkSession, table: str) -> DataFrame:  # pragma: no cover
         return spark.read.format("iceberg").load(self._ident(table))
 
-    def _last_snapshot(self, spark: SparkSession, table: str) -> str:  # pragma: no cover
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {self._ident(table)}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).head()
-        return str(row[0]) if row else ""
-
-    def append(self, df: DataFrame, table: str) -> str:  # pragma: no cover
+    def append(self, df: DataFrame, table: str) -> None:  # pragma: no cover
         df.writeTo(self._ident(table)).append()
-        return self._last_snapshot(df.sparkSession, table)
 
-    def overwrite(self, df: DataFrame, table: str) -> str:  # pragma: no cover
+    def overwrite(self, df: DataFrame, table: str) -> None:  # pragma: no cover
         df.writeTo(self._ident(table)).createOrReplace()
-        return self._last_snapshot(df.sparkSession, table)
 
     def exists(self, spark: SparkSession, table: str) -> bool:  # pragma: no cover
         return spark.catalog.tableExists(self._ident(table))
 
-    def upsert(self, df: DataFrame, table: str, key: str) -> str:  # pragma: no cover
+    def upsert(self, df: DataFrame, table: str, key: str) -> None:  # pragma: no cover
         spark = df.sparkSession
         view = f"__upsert_src_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(view)
@@ -195,8 +144,6 @@ class IcebergTableIO(TableIO):
             "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
         )
         spark.catalog.dropTempView(view)
-        return self._last_snapshot(spark, table)
 
-    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> str:  # pragma: no cover
+    def delete_where(self, spark: SparkSession, table: str, predicate: str) -> None:  # pragma: no cover
         spark.sql(f"DELETE FROM {self._ident(table)} WHERE {predicate}")
-        return self._last_snapshot(spark, table)

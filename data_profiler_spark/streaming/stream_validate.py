@@ -19,9 +19,10 @@ Design choices, all deliberate:
   at-least-once — the checkpoint commits AFTER the batch function):
   (1) the stream checkpoint replays only unfinished batches on restart;
   (2) a replayed batch whose manifest rows already committed is SKIPPED by
-  the ``stream_batch_id`` recorded in manifest metrics (the standard
-  idempotent-foreachBatch recipe; on Iceberg the same guard is an
-  overwrite-by-batch-id predicate);
+  the ``stream_batch_id`` recorded in manifest metrics — one filtered
+  existence query on the manifest's done rows (``Manifest.has_batch``),
+  the standard idempotent-foreachBatch recipe; on Iceberg the same guard is
+  an overwrite-by-batch-id predicate;
   (3) a batch killed between its output appends and its manifest commit
   leaves orphan rows that committed reads filter out
   (``ValidationRun.read_committed``) — the replay re-appends under a new
@@ -76,7 +77,6 @@ def validate_stream(
     input_path: str,
     checkpoint_dir: str,
     n_partitions: int = 32,
-    salt_mode: str = "stats",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     timeout_sec: float | None = None,
@@ -97,10 +97,9 @@ def validate_stream(
         if batch_df.isEmpty():
             return
         run = ValidationRun(
-            spark, io, n_partitions=n_partitions, salt_mode=salt_mode,
-            manifest_table="manifest_stream",
+            spark, io, n_partitions=n_partitions, manifest_table="manifest_stream"
         )
-        if batch_id in run.manifest.completed_batch_ids():
+        if run.manifest.has_batch(batch_id):
             return  # replayed batch already fully committed — idempotent skip
         out.batches.append(
             run.run(

@@ -49,13 +49,6 @@ def main() -> int:
         "it does not share a pipeline with a generator)",
     )
     ap.add_argument(
-        "--salt-mode",
-        default="stats",
-        choices=["stats", "bytes", "none"],
-        help="anti-skew salt placement: stats=map-side decode, salt the small "
-        "stats frame (default); bytes=shuffle the payload before decode",
-    )
-    ap.add_argument(
         "--repeat",
         type=int,
         default=1,
@@ -128,9 +121,7 @@ def main() -> int:
         extra_confs={"spark.ui.showConsoleProgress": "false", **AUDIO_TABLE_CONFS},
     )
     io = ParquetTableIO(args.output)
-    run = ValidationRun(
-        spark, io, n_partitions=args.partitions, salt_mode=args.salt_mode
-    )
+    run = ValidationRun(spark, io, n_partitions=args.partitions)
 
     if args.clips_path:
         clips = spark.read.parquet(args.clips_path)
@@ -207,9 +198,7 @@ def main() -> int:
         best = None
         for t in range(args.repeat):
             io_t = ParquetTableIO(os.path.join(args.output, f"trial{t}"))
-            run_t = ValidationRun(
-                spark, io_t, n_partitions=args.partitions, salt_mode=args.salt_mode
-            )
+            run_t = ValidationRun(spark, io_t, n_partitions=args.partitions)
             res = run_t.run(clips, transcripts=transcripts)
             trials.append(round(res.clips_per_sec, 1))
             if best is None or res.clips_per_sec > best.clips_per_sec:

@@ -4,9 +4,9 @@ The sandbox has no iceberg-spark-runtime jar (SURVEY.md §7), so the
 production path cannot execute here — but the SQL it would emit CAN be
 pinned: these tests drive IcebergTableIO against a recording stub of the
 SparkSession/DataFrame surface and assert statement text and call order
-(MERGE INTO shape, snapshot-id query, delete predicate). A regression in
-the merge clause or snapshot lineage query now fails a test instead of
-surfacing on a real cluster.
+(MERGE INTO shape, delete predicate). A regression in the merge clause now
+fails a test instead of surfacing on a real cluster. Writes run no
+snapshot query: the resume manifest is the engine's only commit record.
 """
 
 from __future__ import annotations
@@ -26,23 +26,13 @@ class _Catalog:
         return True
 
 
-class _Result:
-    def __init__(self, row):
-        self._row = row
-
-    def head(self):
-        return self._row
-
-
 class _FakeSpark:
-    def __init__(self, snapshot_id="4242"):
+    def __init__(self):
         self.log = []
         self.catalog = _Catalog(self.log)
-        self._snapshot_id = snapshot_id
 
     def sql(self, statement):
         self.log.append(("sql", " ".join(statement.split())))
-        return _Result((self._snapshot_id,))
 
 
 class _FakeWriter:
@@ -75,48 +65,42 @@ def _io(spark) -> IcebergTableIO:
     return io
 
 
-def test_upsert_emits_merge_then_snapshot_query_then_drops_view():
+def test_upsert_emits_merge_then_drops_view():
     spark = _FakeSpark()
     io = _io(spark)
-    snap = io.upsert(_FakeDF(spark), "clips", key="clip_id")
-    assert snap == "4242"
+    io.upsert(_FakeDF(spark), "clips", key="clip_id")
 
     kinds = [k for k, _ in spark.log]
-    # merge commits, the temp source view is dropped, THEN lineage is read
-    assert kinds == ["createView", "sql", "dropTempView", "sql"]
+    # merge commits, then the temp source view is dropped; nothing else
+    assert kinds == ["createView", "sql", "dropTempView"]
 
-    (_, view), (_, merge), (_, dropped), (_, snap_q) = spark.log
+    (_, view), (_, merge), (_, dropped) = spark.log
     assert view == dropped  # temp source view is cleaned up
     assert merge == (
         f"MERGE INTO lake.profiler.clips t USING {view} s "
         "ON t.clip_id = s.clip_id "
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
     )
-    assert snap_q == (
-        "SELECT snapshot_id FROM lake.profiler.clips.snapshots "
-        "ORDER BY committed_at DESC LIMIT 1"
-    )
 
 
-def test_append_and_overwrite_route_through_writeTo_and_report_snapshot():
-    spark = _FakeSpark(snapshot_id="77")
+def test_append_and_overwrite_route_through_writeTo():
+    spark = _FakeSpark()
     io = _io(spark)
-    assert io.append(_FakeDF(spark), "verdicts") == "77"
-    assert spark.log[0] == ("writeTo.append", "lake.profiler.verdicts")
-    assert io.overwrite(_FakeDF(spark), "baseline_hist") == "77"
-    assert ("writeTo.createOrReplace", "lake.profiler.baseline_hist") in spark.log
+    io.append(_FakeDF(spark), "verdicts")
+    io.overwrite(_FakeDF(spark), "baseline_hist")
+    assert spark.log == [
+        ("writeTo.append", "lake.profiler.verdicts"),
+        ("writeTo.createOrReplace", "lake.profiler.baseline_hist"),
+    ]
 
 
 def test_delete_where_emits_predicate_delete():
     spark = _FakeSpark()
     io = _io(spark)
     io.delete_where(spark, "violations", "snapshot_id = 'abc'")
-    assert spark.log[0] == (
-        "sql",
-        "DELETE FROM lake.profiler.violations WHERE snapshot_id = 'abc'",
-    )
-    # snapshot lineage is queried after the delete commit
-    assert spark.log[1][1].startswith("SELECT snapshot_id FROM lake.profiler.violations.snapshots")
+    assert spark.log == [
+        ("sql", "DELETE FROM lake.profiler.violations WHERE snapshot_id = 'abc'"),
+    ]
 
 
 def test_exists_uses_catalog_with_full_identifier():

@@ -153,24 +153,42 @@ def test_corpus_plan_is_scale_shaped(spark, name):
             )
 
 
-# Spark jobs and stages (skipped ones included) of one drift_scores collect
-# at sf0.001. Before the one drift core (four paired PSI/KS calls) it ran
-# 16 jobs and 36 stages. A budget may only go down; raising it needs a
-# CHANGES.md line saying why.
-DRIFT_SCORES_JOB_BUDGET = 11
-DRIFT_SCORES_STAGE_BUDGET = 22
+# Spark jobs and stages (skipped ones included) of one collect of each of
+# bench.py's 17 HEADLINE entries at sf0.001, each the count measured when
+# it was pinned. drift_scores ran 16 jobs and 36 stages before the one drift
+# core (four paired PSI/KS calls). A budget may only go down; raising one
+# needs a CHANGES.md line saying why.
+JOB_STAGE_BUDGETS: dict[str, tuple[int, int]] = {
+    "pricing_summary": (3, 4),
+    "top_revenue_orders": (7, 8),
+    "pareto_abc_parts": (11, 26),
+    "user_running_value": (3, 4),
+    "profile_column_stats": (3, 4),
+    "verdict_grid": (6, 8),
+    "drift_scores": (11, 22),
+    "dedup_minhash_lsh": (4, 6),
+    "dedup_simhash": (4, 7),
+    "text_features": (2, 2),
+    "ann_cosine_topk": (4, 5),
+    "ann_ivf_topk": (9, 16),
+    "part_material_flow": (9, 15),
+    "hll_distinct": (6, 10),
+    "quantile_sketch": (8, 13),
+    "dup_clusters": (12, 17),
+    "stratified_sample": (3, 3),
+}
 
 
-def test_drift_scores_job_and_stage_budget(spark, count_jobs):
+@pytest.mark.parametrize("name", list(JOB_STAGE_BUDGETS))
+def test_headline_job_and_stage_budget(spark, count_jobs, name):
     from data_profiler_spark.functions.windows import release_cumsum_caches
 
-    fn, _ = CORPUS["drift_scores"]
+    fn, _ = CORPUS[name]
     try:
         rows, jobs, stages = count_jobs(lambda: fn(spark, SF_DIR).collect())
     finally:
         release_cumsum_caches()
+    job_budget, stage_budget = JOB_STAGE_BUDGETS[name]
     assert len(rows) > 0
-    assert jobs <= DRIFT_SCORES_JOB_BUDGET, f"{jobs} jobs > budget {DRIFT_SCORES_JOB_BUDGET}"
-    assert stages <= DRIFT_SCORES_STAGE_BUDGET, (
-        f"{stages} stages > budget {DRIFT_SCORES_STAGE_BUDGET}"
-    )
+    assert jobs <= job_budget, f"{name}: {jobs} jobs > budget {job_budget}"
+    assert stages <= stage_budget, f"{name}: {stages} stages > budget {stage_budget}"

@@ -195,45 +195,49 @@ def test_manifest_snapshot_lineage(spark, tmp_io):
     assert prof.filter(F.col("snapshot_id") == res.snapshot_id).count() == prof.count()
 
 
-@pytest.mark.parametrize("mode", ["bytes", "none"])
-def test_salt_modes_agree(spark, tmp_io, corrupted, mode):
-    """Salt placement is a physical-plan choice; verdicts and violation rows
-    must be identical to the default map-side-decode ('stats') mode."""
+def _fabricated_history(spark, root: str, n_runs: int):
+    """A table root whose manifest records ``n_runs`` committed runs (one
+    done row each, written as ONE append) and a verdicts table holding one
+    row per committed run plus one orphan row no manifest row names."""
+    from data_profiler_spark.functions.frames import local_frame
+    from data_profiler_spark.schemas import MANIFEST_SCHEMA
+    from data_profiler_spark.sources.tableio import ParquetTableIO
+
+    io = ParquetTableIO(root)
+    snaps = [f"{i:016x}" for i in range(n_runs)]
+    manifest = [(i % PARTS, s, "done", 1, "{}", 0) for i, s in enumerate(snaps)]
+    io.append(local_frame(spark, manifest, MANIFEST_SCHEMA).coalesce(1), "manifest")
+    verdicts = [(s, "pk_unique") for s in snaps + ["orphan"]]
+    io.append(
+        local_frame(spark, verdicts, "snapshot_id string, check_name string").coalesce(1),
+        "verdicts",
+    )
+    return ValidationRun(spark, io, n_partitions=PARTS)
+
+
+def test_read_committed_cost_does_not_grow_with_history(spark, count_jobs):
+    """Committed reads are a left-semi join with the manifest, not an
+    IN-list of every committed snapshot id collected to the driver: over
+    1,000 committed runs they run the same jobs as over one."""
+    import re
     import shutil
     import tempfile
 
-    from data_profiler_spark.sources.tableio import ParquetTableIO
-
-    clips, tr = corrupted
-    base = ValidationRun(spark, tmp_io, n_partitions=PARTS, salt_mode="stats").run(
-        clips, transcripts=tr
-    )
-    root = tempfile.mkdtemp(prefix="dps_salt_")
-    try:
-        other = ValidationRun(
-            spark, ParquetTableIO(root), n_partitions=PARTS, salt_mode=mode
-        ).run(clips, transcripts=tr)
-        key = ["check_name", "partition_id"]
-        a = sorted(
-            (r["check_name"], r["partition_id"], r["passed"], r["violation_count"])
-            for r in base.verdicts.select(*key, "passed", "violation_count").collect()
-        )
-        b = sorted(
-            (r["check_name"], r["partition_id"], r["passed"], r["violation_count"])
-            for r in other.verdicts.select(*key, "passed", "violation_count").collect()
-        )
-        assert a == b
-        va = sorted(
-            (r["check_name"], r["clip_id"])
-            for r in base.violations.select("check_name", "clip_id").collect()
-        )
-        vb = sorted(
-            (r["check_name"], r["clip_id"])
-            for r in other.violations.select("check_name", "clip_id").collect()
-        )
-        assert va == vb
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    counts = {}
+    for n_runs in (1, 1000):
+        root = tempfile.mkdtemp(prefix="dps_hist_")
+        try:
+            run = _fabricated_history(spark, root, n_runs)
+            rows, jobs, stages = count_jobs(lambda: run.read_committed("verdicts").collect())
+            assert len(rows) == n_runs  # the orphan row is dropped
+            assert "orphan" not in {r["snapshot_id"] for r in rows}
+            plan = run.read_committed("verdicts")._jdf.queryExecution().optimizedPlan().toString()
+            assert "LeftSemi" in plan
+            assert not re.search(r"snapshot_id#\d+ (IN|INSET) ", plan), plan
+            counts[n_runs] = (jobs, stages)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+    assert counts[1000] == counts[1], counts
 
 
 def test_mismatched_baseline_tables_refuse_to_score(spark, tmp_io):

@@ -157,9 +157,11 @@ def test_stream_manifest_namespace_and_batch_idempotence(spark, tmp_io, dirs):
     assert len(stream_man.completed_partitions()) > 0
 
     # (b) idempotent replay: batch id 0 was committed by the stream run
-    assert 0 in stream_man.completed_batch_ids()
+    assert stream_man.has_batch(0)
+    assert not stream_man.has_batch(1)
+    assert not batch_man.has_batch(0)
     vr = ValidationRun(spark, tmp_io, n_partitions=PARTS, manifest_table="manifest_stream")
-    assert 0 in vr.manifest.completed_batch_ids()  # the skip guard's input
+    assert vr.manifest.has_batch(0)  # the skip guard's input
 
     # a batch-mode run over the SAME table root validates all rows (no skip
     # from stream lineage)

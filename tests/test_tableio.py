@@ -5,6 +5,8 @@ transactional table operations."""
 
 from __future__ import annotations
 
+import os
+
 
 def _rows(io, spark, table):
     return {
@@ -18,8 +20,6 @@ def test_upsert_updates_and_inserts(spark, tmp_io):
     df2 = spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string")
     tmp_io.upsert(df2, "t", key="k")
     assert _rows(tmp_io, spark, "t") == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-    # snapshot ledger records the merge commit
-    assert [s["mode"] for s in tmp_io.snapshots("t")] == ["overwrite", "upsert"]
 
 
 def test_upsert_on_missing_table_creates_it(spark, tmp_io):
@@ -35,4 +35,20 @@ def test_delete_where(spark, tmp_io):
     tmp_io.overwrite(df, "t")
     tmp_io.delete_where(spark, "t", "k >= 3")
     assert _rows(tmp_io, spark, "t") == {(1, "a"), (2, "b")}
-    assert [s["mode"] for s in tmp_io.snapshots("t")] == ["overwrite", "delete"]
+
+
+def test_writes_leave_only_table_directories(spark, tmp_io):
+    """The table IO keeps no lineage of its own (the manifest is the only
+    commit record): after every kind of write the root holds one directory
+    per table and nothing else — no ledger file, no leftover swap dir."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    tmp_io.append(df, "a")
+    tmp_io.append(df, "a")
+    tmp_io.overwrite(df, "o")
+    tmp_io.upsert(df, "u", key="k")  # creates
+    tmp_io.upsert(df, "u", key="k")  # merges (atomic dir swap)
+    tmp_io.overwrite(df, "d")
+    tmp_io.delete_where(spark, "d", "k = 1")
+    entries = sorted(os.listdir(tmp_io.root))
+    assert entries == ["a", "d", "o", "u"]
+    assert all(os.path.isdir(os.path.join(tmp_io.root, e)) for e in entries)

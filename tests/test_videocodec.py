@@ -202,6 +202,23 @@ def test_avi_short_strh_in_sibling_stream_is_skipped():
     assert np.array_equal(dec, fr)
 
 
+def test_avi_short_video_strf_raises():
+    """A video strf below the 40-byte BITMAPINFOHEADER floor must fail the
+    decode, like a short video strh — not fall back to avih dimensions with
+    bpp and compression never checked."""
+    b = vc.encode_avi(_frames(1, 3, 3, seed=5), fps=10.0)
+    strf_at = b.find(b"strf")
+    cut = 20  # bytes dropped from the strf body (40 → 20)
+    out = bytearray(b[: strf_at + 8 + 40 - cut] + b[strf_at + 8 + 40 :])
+    struct.pack_into("<I", out, strf_at + 4, 40 - cut)
+    # shrink every enclosing chunk: the strl and hdrl LISTs and the RIFF
+    for at in (out.find(b"strl") - 8, out.find(b"hdrl") - 8, 0):
+        size = struct.unpack_from("<I", out, at + 4)[0]
+        struct.pack_into("<I", out, at + 4, size - cut)
+    with pytest.raises(ValueError, match="avi: video strf chunk too short"):
+        vc.decode_avi(bytes(out))
+
+
 def test_avi_tiny_fps_raises_valueerror_not_zerodivision():
     with pytest.raises(ValueError, match="avi:"):
         vc.encode_avi(_frames(1, 2, 2), fps=1e-4)
