@@ -1,9 +1,6 @@
 from data_profiler_spark.checks.constraints import (  # noqa: F401
-    check_not_null,
-    check_pk_not_null,
-    check_referential,
     check_schema,
-    check_unique,
+    key_violations,
     verdicts,
     with_partition_id,
 )

@@ -1,22 +1,23 @@
-"""Constraint checks: uniqueness, PK null/empty, referential integrity,
+"""Constraint checks: PK null/empty, uniqueness, referential integrity,
 consistency — each emits a *violations* DataFrame (VIOLATION_SCHEMA) and the
 suite aggregates per-partition pass/fail *verdicts* (VERDICT_SCHEMA).
 
 Reference semantics being re-expressed (file:line in /root/reference):
 - PK null/empty check: ``check_primary_key_values_not_null``
   (data_profiler/helpers/functions/functions.py:57-64), called from
-  data_directory.py:304-309.
+  data_directory.py:304-309 — a :func:`row_level_violations` spec.
 - FK ⊆ PK referential check: ``get_fk_values_not_in_pk_values``
-  (functions.py:68-78) — a hand-rolled set difference; here a ``left_anti``
-  join (SURVEY.md J7/U1). The parent key side is deduplicated first so the
-  anti-join's build side stays minimal; Catalyst/AQE picks broadcast when it
-  fits.
+  (functions.py:68-78) — a hand-rolled set difference; here
+  :func:`key_violations` (SURVEY.md J7/U1): the sides' keys tagged by side
+  and counted per side in ONE groupBy(key) — one exchange, no join, so no
+  hash-join build side. Uniqueness is a spec over the same counts.
 - verdict objects: FileValidation / DataDirectoryValidation booleans +
   error lists (helpers/models/DataFiles.py:52-77) → typed DataFrames here,
   with the "first-10 offending keys" sampling of data_directory.py:306-356
-  available via ``violations.limit(k)`` at report time.
+  available via ``violations.limit(k)`` at report time; the metadata-sized
+  checks × partitions grid is built driver-side (:func:`verdict_rows`).
 
-Scale notes: all checks are pure DataFrame ops (anti-joins, groupBy counts)
+Scale notes: all checks are pure DataFrame ops (filters, groupBy counts)
 → map-side combinable, AQE-skew-safe, no driver-side data. ``partition_id``
 is a deterministic hash bucket of the PK so verdicts stay per-partition and
 a resumed run reproduces identical bucket assignment (SURVEY.md §7).
@@ -24,8 +25,13 @@ a resumed run reproduces identical bucket assignment (SURVEY.md §7).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_profiler_spark.functions.frames import local_frame
+from data_profiler_spark.schemas import VERDICT_SCHEMA
 
 DEFAULT_PARTITIONS = 32
 
@@ -36,16 +42,6 @@ def with_partition_id(df: DataFrame, n_partitions: int = DEFAULT_PARTITIONS, key
         F.pmod(F.xxhash64(F.col(key)), F.lit(n_partitions))
     )
     return df.withColumn("partition_id", pid.cast("int"))
-
-
-def _violations(df: DataFrame, check_name: str, key: str, detail) -> DataFrame:
-    pid = F.col("partition_id") if "partition_id" in df.columns else F.lit(None)
-    return df.select(
-        F.lit(check_name).alias("check_name"),
-        F.col(key).cast("string").alias("clip_id"),
-        pid.cast("int").alias("partition_id"),
-        detail.cast("string").alias("detail"),
-    )
 
 
 def row_level_violations(
@@ -87,61 +83,37 @@ def row_level_violations(
     )
 
 
-def check_pk_not_null(df: DataFrame, key: str = "clip_id", name: str = "pk_not_null") -> DataFrame:
-    """Null or empty primary key (functions.py:57-64 semantics)."""
-    bad = df.filter(F.col(key).isNull() | (F.trim(F.col(key)) == ""))
-    return _violations(bad, name, key, F.lit("null or empty primary key"))
-
-
-def check_not_null(
-    df: DataFrame, column: str, key: str = "clip_id", name: str | None = None
-) -> DataFrame:
-    """Null or empty value in a required (non-PK) column."""
-    name = name or f"{column}_not_null"
-    bad = df.filter(F.col(column).isNull() | (F.trim(F.col(column).cast("string")) == ""))
-    return _violations(bad, name, key, F.lit(f"null or empty {column}"))
-
-
-def check_unique(
-    df: DataFrame,
-    key: str = "clip_id",
-    name: str = "pk_unique",
+def key_violations(
+    sides: dict[str, DataFrame],
+    key: str,
+    specs: list[tuple],
     n_partitions: int = DEFAULT_PARTITIONS,
 ) -> DataFrame:
-    """Duplicate primary keys → one violation row per duplicated key value.
+    """Key checks over one or more tables from ONE groupBy(key).
 
-    groupBy+count is map-side combinable; only keys with count>1 survive.
-    Duplicates of a key always share its hash bucket, so per-partition
-    uniqueness verdicts are exact.
+    Each side is projected to ``key`` and tagged with a 0/1 column per side
+    name; the union, NULL keys dropped, is grouped by ``key`` summing each
+    tag into a count column named after its side. ``specs`` are
+    :func:`row_level_violations` specs over those counts — uniqueness of
+    ``t`` is ``F.col(t) > 1``, FK ⊆ PK is
+    ``(F.col(child) > 0) & (F.col(parent) == 0)`` — so each failing key
+    yields one row per spec, in its with_partition_id bucket. The sides'
+    key columns must share one type.
     """
-    dups = (
-        df.filter(F.col(key).isNotNull())
+    names = list(sides)
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(key, *(F.lit(int(n == side)).alias(n) for n in names))
+            for side, df in sides.items()
+        ],
+    )
+    counts = (
+        tagged.filter(F.col(key).isNotNull())
         .groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
+        .agg(*(F.sum(n).alias(n) for n in names))
     )
-    dups = with_partition_id(dups, n_partitions, key=key)
-    return _violations(dups, name, key, F.concat(F.lit("duplicate key, count="), F.col("__n")))
-
-
-def check_referential(
-    child: DataFrame,
-    parent: DataFrame,
-    key: str = "clip_id",
-    name: str = "fk_in_pk",
-    detail: str = "foreign key not present in parent",
-    n_partitions: int = DEFAULT_PARTITIONS,
-) -> DataFrame:
-    """FK ⊆ PK via left_anti (functions.py:68-78; SURVEY.md J7)."""
-    parent_keys = parent.select(key).filter(F.col(key).isNotNull()).distinct()
-    orphans = (
-        child.select(key)
-        .filter(F.col(key).isNotNull())
-        .join(parent_keys, key, "left_anti")
-        .distinct()
-    )
-    orphans = with_partition_id(orphans, n_partitions, key=key)
-    return _violations(orphans, name, key, F.lit(detail))
+    return row_level_violations(with_partition_id(counts, n_partitions, key=key), specs, key=key)
 
 
 def check_schema(df: DataFrame, expected, name: str = "schema_conformance") -> tuple[bool, list[str]]:
@@ -163,6 +135,30 @@ def check_schema(df: DataFrame, expected, name: str = "schema_conformance") -> t
     return (not errors, errors)
 
 
+def verdict_rows(
+    check_names: list[str],
+    rows_per_partition: dict[int, int],
+    counts: dict[tuple[str, int], int],
+) -> list[dict]:
+    """The checks × partitions verdict grid as VERDICT_SCHEMA dicts, from
+    (check_name, partition_id) → violation ``counts``: a clean partition
+    gets an explicit PASS row (the reference's is_valid=True path,
+    models/DataFiles.py:52-77); counts for partitions missing from
+    ``rows_per_partition`` are dropped."""
+    return [
+        {
+            "check_name": c,
+            "partition_id": p,
+            "passed": counts.get((c, p), 0) == 0,
+            "violation_count": int(counts.get((c, p), 0)),
+            "rows_checked": int(rows),
+            "detail": None,
+        }
+        for c in check_names
+        for p, rows in rows_per_partition.items()
+    ]
+
+
 def verdicts(
     violations: DataFrame,
     totals: DataFrame,
@@ -170,35 +166,26 @@ def verdicts(
 ) -> DataFrame:
     """Per-(check, partition) pass/fail from a union of violation frames.
 
-    ``totals`` = (partition_id, rows_checked) for the table under test. The
-    cross of checks × partitions is built with a broadcast cross-join of two
-    tiny dims, then left-joined to violation counts — so partitions with no
-    violations still get an explicit PASS row (the reference's is_valid=True
-    path, models/DataFiles.py:52-77).
+    ``totals`` = (partition_id, rows_checked) for the table under test. ONE
+    collect brings back the totals and the (check_name, partition_id)
+    violation counts — at most |partitions| + |checks| × |partitions| rows —
+    and :func:`verdict_rows` builds the grid driver-side.
     """
-    from data_profiler_spark.functions.frames import local_frame
-
-    spark = violations.sparkSession
-    # local_frame, not createDataFrame(list): the pickled-rows path would
-    # drag a Python-worker stage into EVERY downstream job that touches the
-    # verdict grid (~3-4s cold fork per run on this sandbox — the r3
-    # verdict_grid bench regression); the Arrow path is a pure JVM local
-    # relation.
-    checks_df = local_frame(spark, [(c,) for c in check_names], "check_name string")
-    counts = violations.groupBy("check_name", "partition_id").agg(
-        F.count(F.lit(1)).alias("violation_count")
-    )
-    grid = F.broadcast(checks_df).crossJoin(totals)
-    out = (
-        grid.join(counts, ["check_name", "partition_id"], "left")
-        .withColumn("violation_count", F.coalesce("violation_count", F.lit(0)))
-        .select(
-            "check_name",
+    rows = (
+        totals.select(
+            F.lit(None).cast("string").alias("check_name"),
             F.col("partition_id").cast("int"),
-            (F.col("violation_count") == 0).alias("passed"),
-            F.col("violation_count").cast("long"),
-            F.col("rows_checked").cast("long"),
-            F.lit(None).cast("string").alias("detail"),
+            F.col("rows_checked").cast("long").alias("n"),
         )
+        .unionByName(
+            violations.groupBy("check_name", "partition_id").agg(F.count(F.lit(1)).alias("n"))
+        )
+        .collect()
     )
-    return out
+    per_part = {r["partition_id"]: r["n"] for r in rows if r["check_name"] is None}
+    counts = {(r["check_name"], r["partition_id"]): r["n"] for r in rows if r["check_name"] is not None}
+    # local_frame (Arrow): a pure JVM local relation, where the pickled-rows
+    # path drags a Python-worker stage into every job that reads the grid
+    return local_frame(
+        violations.sparkSession, verdict_rows(check_names, per_part, counts), VERDICT_SCHEMA
+    )

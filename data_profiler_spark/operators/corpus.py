@@ -14,8 +14,9 @@ the window. Slots were reclaimed by merging, not dropping, coverage:
 
 - text_features = lang_id + text_quality + token_counts + doc_fingerprint
   (one projection, one scan — also the better 100 TB shape)
-- check_violations = check_unique_violations + check_referential_violations
-  (the engine's single violations-table contract)
+- check_violations = the r2 check_unique_violations + check_referential_violations
+  (the engine's single violations-table contract; each check is one
+  checks.key_violations call, the shape the runner's key checks run)
 - quantile_sketch and hll_distinct graduated from rows-only to oracled
   (exact counterpart values hash-checked + sketch error bound pinned true)
 - drift_scores = psi_drift + ks_exact_drift (both computations unchanged,

@@ -17,15 +17,41 @@ from data_profiler_spark.fixtures import generate_clips
 from data_profiler_spark.operators.corpus_relational import T
 from data_profiler_spark.profiling.profile import column_profile, outlier_counts
 
-# --- engine uniqueness check (check_unique → J7/A1 semantics) ---------------
+# --- violations table: uniqueness + referential (J7/J8 + A1) ----------------
 
-def check_unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def check_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J7/J8 + A1: the engine's single violations-table contract — the
+    uniqueness check (lineitem's l_orderkey) and the referential check
+    (functions.py:68-78: l_partkey ⊆ the p_size < 25 parts) append to ONE
+    violations frame (schema check_name/key_value/detail), exactly how
+    plans/runner.py accumulates all_violations into a single table and how
+    the reference appends every check's failures to one list. Each check
+    is one ``key_violations`` call (a one-side and a two-side groupBy, no
+    join) over one read of lineitem."""
     li = T(spark, sf_dir, "lineitem")
-    v = constraints.check_unique(li, key="l_orderkey", name="pk_unique")
-    return v.select(
-        "check_name",
-        F.col("clip_id").alias("key_value"),
-        "detail",
+    parent = T(spark, sf_dir, "part").filter(F.col("p_size") < 25)
+    n = F.col("lineitem")
+    unique = constraints.key_violations(
+        {"lineitem": li},
+        "l_orderkey",
+        [("pk_unique", n > 1, F.concat(F.lit("duplicate key, count="), n))],
+    )
+    orphans = constraints.key_violations(
+        {
+            "child": li.select(F.col("l_partkey").alias("part_ref")),
+            "parent": parent.select(F.col("p_partkey").alias("part_ref")),
+        },
+        "part_ref",
+        [
+            (
+                "fk_in_pk",
+                (F.col("child") > 0) & (F.col("parent") == 0),
+                F.lit("foreign key not present in parent"),
+            )
+        ],
+    )
+    return unique.unionByName(orphans).select(
+        "check_name", F.col("clip_id").alias("key_value"), "detail"
     )
 
 
@@ -36,22 +62,6 @@ SELECT 'pk_unique' AS check_name,
 FROM lineitem GROUP BY l_orderkey HAVING COUNT(*) > 1
 """
 
-
-# --- engine referential check (left_anti, functions.py:68-78) ---------------
-
-def check_referential_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = T(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("part_ref"))
-    parent = (
-        T(spark, sf_dir, "part")
-        .filter(F.col("p_size") < 25)
-        .select(F.col("p_partkey").alias("part_ref"))
-    )
-    v = constraints.check_referential(
-        li, parent, key="part_ref", name="fk_in_pk", detail="foreign key not present in parent"
-    )
-    return v.select("check_name", F.col("clip_id").alias("key_value"), "detail")
-
-
 CHECK_REFERENTIAL_SQL = """
 SELECT DISTINCT 'fk_in_pk' AS check_name,
        CAST(l_partkey AS VARCHAR) AS key_value,
@@ -59,22 +69,6 @@ SELECT DISTINCT 'fk_in_pk' AS check_name,
 FROM lineitem
 WHERE NOT EXISTS (SELECT 1 FROM part WHERE p_size < 25 AND p_partkey = l_partkey)
 """
-
-
-# --- merged violations table (uniqueness + referential in one contract) ------
-
-def check_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7/J8 + A1: the engine's single violations-table contract — the
-    uniqueness check and the referential check append to ONE violations
-    frame (schema check_name/key_value/detail), exactly how plans/runner.py
-    accumulates all_violations into a single table and how the reference
-    appends every check's failures to one list. Merged from the r2
-    check_unique_violations + check_referential_violations entries (one
-    driver slot, same two operators, identical schemas)."""
-    return check_unique_violations(spark, sf_dir).unionByName(
-        check_referential_violations(spark, sf_dir)
-    )
-
 
 CHECK_VIOLATIONS_SQL = f"{CHECK_UNIQUE_SQL} UNION ALL {CHECK_REFERENTIAL_SQL}"
 

@@ -13,7 +13,8 @@ contract included.
 Scope (correctness-first, documented):
 - Container: 'RIFF'/'AVI ' with LIST 'hdrl' (avih + one 'strl' of
   strh/strf) and LIST 'movi'; a standard 'idx1' index is written (players
-  expect it) but ignored on read — frames are recovered by walking 'movi'.
+  expect it) but ignored on read — frames are recovered by walking 'movi',
+  including the LIST 'rec ' groupings of interleaved files.
 - Frames: uncompressed 24-bpp BGR DIB ('00db'/'00dc' chunks, BI_RGB, rows
   padded to 4 bytes), bottom-up (positive biHeight — what the encoder
   writes) or top-down (negative biHeight) — the rawvideo profile every AVI
@@ -126,6 +127,17 @@ def _walk_chunks(buf: bytes, start: int, end: int):
         pos += 8 + size + (size % 2)
 
 
+def _movi_chunks(buf: bytes, start: int, end: int):
+    """:func:`_walk_chunks` over the movi extent, descending into the
+    LIST 'rec ' groupings an interleaved AVI wraps its frames in; every
+    nested chunk is size-checked against its own list's extent."""
+    for fourcc, body, size in _walk_chunks(buf, start, end):
+        if fourcc == b"LIST" and size >= 4 and buf[body : body + 4] == b"rec ":
+            yield from _movi_chunks(buf, body + 4, body + size)
+        else:
+            yield fourcc, body, size
+
+
 def decode_avi(payload: bytes, fmt: str = "avi") -> tuple[np.ndarray, float]:
     """Uncompressed AVI bytes → ((n, h, w, 3) uint8 RGB frames, fps)."""
     if payload is None or len(payload) < 12:
@@ -221,7 +233,7 @@ def decode_avi(payload: bytes, fmt: str = "avi") -> tuple[np.ndarray, float]:
     frame_size = rb * height
     frames = []
     vid_prefix = b"%02d" % video_stream  # '01db' = stream 1's frames
-    for fourcc, body, size in _walk_chunks(payload, *frames_extent):
+    for fourcc, body, size in _movi_chunks(payload, *frames_extent):
         if fourcc[:2] != vid_prefix or fourcc[2:4] not in (b"db", b"dc"):
             continue
         if size != frame_size:

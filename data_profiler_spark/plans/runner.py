@@ -43,7 +43,11 @@ from pyspark.storagelevel import StorageLevel
 
 from data_profiler_spark.audio import decode_stats, salt_repartition
 from data_profiler_spark.checks import with_partition_id
-from data_profiler_spark.checks.constraints import row_level_violations
+from data_profiler_spark.checks.constraints import (
+    key_violations,
+    row_level_violations,
+    verdict_rows,
+)
 from data_profiler_spark.drift import drift_from_hist_rows
 from data_profiler_spark.functions.frames import local_frame
 from data_profiler_spark.plans.manifest import Manifest
@@ -398,27 +402,15 @@ class ValidationRun:
                 drift_rows = f_drift.result()
                 phase("tail")
 
-                # The verdict grid (explicit PASS rows for clean partitions,
-                # DataFiles.py:52-77 semantics) is assembled driver-side: it
-                # is |checks|×|partitions| rows of metadata, and building it
-                # as a crossJoin+left-join DAG costs more in planning than the
-                # data is worth at any scale.
-                verdict_rows = [
-                    {
-                        "check_name": c,
-                        "partition_id": g["partition_id"],
-                        "passed": counts.get((c, g["partition_id"]), 0) == 0,
-                        "violation_count": int(counts.get((c, g["partition_id"]), 0)),
-                        "rows_checked": int(g["rows"]),
-                        "detail": None,
-                    }
-                    for c in check_names
-                    for g in groups
-                ]
+                # The verdict grid (explicit PASS rows for clean partitions)
+                # is |checks|×|partitions| rows of metadata: built
+                # driver-side, not as a Spark DAG.
+                rows_per_part = {g["partition_id"]: int(g["rows"]) for g in groups}
+                grid = verdict_rows(check_names, rows_per_part, counts)
                 # local_frame (Arrow path): a plain createDataFrame of Python
                 # rows is RDD-backed and re-enters Python workers on every
                 # write (~4s per tiny metadata write measured on this sandbox).
-                verdict_df = local_frame(self.spark, verdict_rows, VERDICT_SCHEMA)
+                verdict_df = local_frame(self.spark, grid, VERDICT_SCHEMA)
                 profile = local_frame(self.spark, prof_rows, PROFILE_DDL)
                 sketches = local_frame(
                     self.spark,
@@ -444,12 +436,11 @@ class ValidationRun:
 
             # -- then the manifest, last (crash-safe ordering)
             viol_per_part: dict[int, int] = {}
-            for r in verdict_rows:
+            for r in grid:
                 p = r["partition_id"]
                 viol_per_part[p] = viol_per_part.get(p, 0) + r["violation_count"]
-            rows_per_part = {g["partition_id"]: int(g["rows"]) for g in groups}
             rows = sum(rows_per_part.values())
-            all_passed = all(r["passed"] for r in verdict_rows)
+            all_passed = all(r["passed"] for r in grid)
             part_stats = [
                 {
                     "partition_id": p,
@@ -492,13 +483,14 @@ class ValidationRun:
         check's violation rows.
 
         Row-level checks fuse into ONE scan of stats (no joins). Uniqueness
-        and both referential directions come from ONE groupBy over the clip
-        ids of both tables, each row tagged by its side: a key counted more
-        than once on the clip side is a duplicate, one with no transcript
-        row is a clip without transcript, and one seen only on the transcript
-        side is a transcript without clip. That is one exchange where a
-        uniqueness groupBy plus two anti-joins took three, and the
-        transcripts table is scanned once, so it needs no cache.
+        and both referential directions are specs of ONE
+        :func:`key_violations` call over the ``clips`` and ``transcripts``
+        sides: a key counted more than once on the clip side is a
+        duplicate, one with no transcript row is a clip without transcript,
+        and one seen only on the transcript side is a transcript without
+        clip. That is one exchange where a uniqueness groupBy plus two
+        anti-joins took three, and the transcripts table is scanned once,
+        so it needs no cache.
         """
         key = F.col("clip_id")
         row_specs = [
@@ -529,7 +521,7 @@ class ValidationRun:
                 F.lit("null or empty transcript"),
             ),
         ]
-        n_clip = F.col("__clips")
+        n_clip = F.col("clips")
         key_specs = [
             (
                 "pk_unique",
@@ -537,26 +529,23 @@ class ValidationRun:
                 F.concat(F.lit("duplicate key, count="), n_clip),
             ),
         ]
-        sides = stats.select("clip_id", F.lit(1).alias("__clip"), F.lit(0).alias("__tr"))
+        sides = {"clips": stats}
         if transcripts is not None:
-            sides = sides.unionByName(
-                transcripts.select("clip_id", F.lit(0).alias("__clip"), F.lit(1).alias("__tr"))
-            )
+            sides["transcripts"] = transcripts
             key_specs += [
                 (
                     "clip_has_transcript",
-                    (n_clip > 0) & (F.col("__trs") == 0),
+                    (n_clip > 0) & (F.col("transcripts") == 0),
                     F.lit("clip has no transcript row"),
                 ),
-                ("transcript_has_clip", n_clip == 0, F.lit("transcript row has no clip")),
+                (
+                    "transcript_has_clip",
+                    (F.col("transcripts") > 0) & (n_clip == 0),
+                    F.lit("transcript row has no clip"),
+                ),
             ]
-        keys = (
-            sides.filter(key.isNotNull())
-            .groupBy("clip_id")
-            .agg(F.sum("__clip").alias("__clips"), F.max("__tr").alias("__trs"))
-        )
         violations = row_level_violations(stats, row_specs).unionByName(
-            row_level_violations(with_partition_id(keys, self.n_partitions), key_specs)
+            key_violations(sides, "clip_id", key_specs, self.n_partitions)
         )
         return [s[0] for s in row_specs + key_specs], violations
 

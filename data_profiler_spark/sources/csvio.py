@@ -189,21 +189,25 @@ def validate_upload_directory(
       detail) carrying every finding — missing files (`file_present`),
       header errors (`header_conformance`), the reference's falsy-PK
       checks (distinct values, per validate_primary_keys), and its five
-      FK ⊆ PK checks (anti-joins on distinct keys, per
-      check_mismatching_primary_key_values; the receipt/order checks run
-      only for HEADERS dirs — REGULAR dirs build headers from the same
-      rows, so those hold by construction). The reference fail-fasts on
-      any finding; the analogous driver decision here is
+      FK ⊆ PK checks (one row per distinct orphan key, per
+      check_mismatching_primary_key_values) as three
+      ``checks.key_violations`` calls — SKU over ItemMaster and its three
+      children, PO_Number, OrderNumber — each one groupBy over the tagged
+      sides, no join. The receipt/order checks run only for HEADERS dirs —
+      REGULAR dirs build headers from the same rows, so those hold by
+      construction. The reference fail-fasts on any finding; the
+      analogous driver decision here is
       ``violations.limit(1).count() == 0`` — a tiny aggregate over a
       lazily-declared plan instead of an eager per-file pipeline.
 
     The reference does NOT check PK uniqueness here (duplicate SKUs reach
-    its transform step); callers wanting that add
-    ``checks.check_unique(frames["ItemMaster"], key="SKU")`` to the union.
+    its transform step); callers wanting that add a
+    ``checks.key_violations({"ItemMaster": frames["ItemMaster"]}, "SKU",
+    [("sku_unique", F.col("ItemMaster") > 1, ...)])`` branch to the union.
     """
     import os
 
-    from data_profiler_spark.checks.constraints import check_referential
+    from data_profiler_spark.checks.constraints import key_violations
     from data_profiler_spark.functions.frames import local_frame
     from data_profiler_spark.functions.windows import pin_cache
 
@@ -254,41 +258,39 @@ def validate_upload_directory(
             "check_name string, clip_id string, partition_id int, detail string",
         )
     ]
-    im = frames.get("ItemMaster")
-    if im is not None:
-        branches.append(_empty_key_violations(im, "SKU", "im_sku_not_empty"))
-        for child_name, check in [
-            ("InboundDetails" if directory_type == "headers" else "Inbound",
-             "inbound_sku_in_item_master"),
-            ("Inventory", "inventory_sku_in_item_master"),
-            ("OrderDetails" if directory_type == "headers" else "Outbound",
-             "outbound_sku_in_item_master"),
-        ]:
-            child = frames.get(child_name)
-            if child is not None:
-                branches.append(
-                    check_referential(
-                        child, im, key="SKU", name=check,
-                        detail=f"{child_name} SKU not in Item Master",
-                    )
-                )
+    inbound, outbound = (
+        ("InboundDetails", "OrderDetails") if directory_type == "headers"
+        else ("Inbound", "Outbound")
+    )
+    # (parent, key, falsy-PK check, [(child, FK ⊆ PK check, detail)])
+    key_checks = [
+        ("ItemMaster", "SKU", "im_sku_not_empty", [
+            (inbound, "inbound_sku_in_item_master", f"{inbound} SKU not in Item Master"),
+            ("Inventory", "inventory_sku_in_item_master", "Inventory SKU not in Item Master"),
+            (outbound, "outbound_sku_in_item_master", f"{outbound} SKU not in Item Master"),
+        ]),
+    ]
     if directory_type == "headers":
-        for hdr, det, key, pk_name, fk_name in [
-            ("InboundHeader", "InboundDetails", "PO_Number",
-             "ibh_po_not_empty", "inbound_details_po_in_header"),
-            ("OrderHeader", "OrderDetails", "OrderNumber",
-             "obh_order_not_empty", "order_details_order_in_header"),
-        ]:
-            h, d = frames.get(hdr), frames.get(det)
-            if h is not None:
-                branches.append(_empty_key_violations(h, key, pk_name))
-            if h is not None and d is not None:
-                branches.append(
-                    check_referential(
-                        d, h, key=key, name=fk_name,
-                        detail=f"{det} {key} not in {hdr}",
-                    )
-                )
+        key_checks += [
+            ("InboundHeader", "PO_Number", "ibh_po_not_empty", [
+                ("InboundDetails", "inbound_details_po_in_header",
+                 "InboundDetails PO_Number not in InboundHeader"),
+            ]),
+            ("OrderHeader", "OrderNumber", "obh_order_not_empty", [
+                ("OrderDetails", "order_details_order_in_header",
+                 "OrderDetails OrderNumber not in OrderHeader"),
+            ]),
+        ]
+    for parent, key, pk_check, children in key_checks:
+        if parent not in frames:
+            continue
+        branches.append(_empty_key_violations(frames[parent], key, pk_check))
+        present = [c for c in children if c[0] in frames]
+        if present:  # FK ⊆ PK: one groupBy over the parent and its children
+            sides = {t: frames[t] for t in [parent] + [c for c, _, _ in present]}
+            specs = [(check, (F.col(c) > 0) & (F.col(parent) == 0), F.lit(detail))
+                     for c, check, detail in present]
+            branches.append(key_violations(sides, key, specs))
     violations = branches[0]
     for b in branches[1:]:
         violations = violations.unionByName(b)

@@ -12,14 +12,12 @@ from pyspark.sql import functions as F
 
 from data_profiler_spark import fixtures
 from data_profiler_spark.checks import (
-    check_not_null,
-    check_pk_not_null,
-    check_referential,
-    check_unique,
     coerce_with_defaults,
+    key_violations,
     verdicts,
     with_partition_id,
 )
+from data_profiler_spark.checks.constraints import row_level_violations, verdict_rows
 
 N = 200
 SEED = 42
@@ -32,17 +30,42 @@ def _counts(violations_df):
     }
 
 
+def _not_null(column: str, name: str, detail: str) -> tuple:
+    """Row-level spec: null or empty (after trim) value in ``column``."""
+    c = F.col(column)
+    return (name, c.isNull() | (F.trim(c.cast("string")) == ""), F.lit(detail))
+
+
+def _pk_not_null() -> tuple:
+    return _not_null("clip_id", "pk_not_null", "null or empty primary key")
+
+
+def _pk_unique() -> tuple:
+    """key_violations spec: a key counted more than once on the ``clips`` side."""
+    n = F.col("clips")
+    return ("pk_unique", n > 1, F.concat(F.lit("duplicate key, count="), n))
+
+
+def _fk_in_pk() -> tuple:
+    """key_violations spec: a key on the ``child`` side and not the ``parent``."""
+    return (
+        "fk_in_pk",
+        (F.col("child") > 0) & (F.col("parent") == 0),
+        F.lit("foreign key not present in parent"),
+    )
+
+
 def test_pk_not_null_and_empty(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"clip_id": ["a", None, "", "  ", "b"]})
     )
-    v = check_pk_not_null(with_partition_id(df, 4)).collect()
+    v = row_level_violations(with_partition_id(df, 4), [_pk_not_null()]).collect()
     assert len(v) == 3  # null, empty, whitespace-only
 
 
 def test_unique_detects_duplicates(spark):
     df = spark.createDataFrame(pd.DataFrame({"clip_id": ["a", "b", "a", "c", "a", "b"]}))
-    v = check_unique(df, n_partitions=4).collect()
+    v = key_violations({"clips": df}, "clip_id", [_pk_unique()], n_partitions=4).collect()
     got = {r["clip_id"]: r["detail"] for r in v}
     assert set(got) == {"a", "b"}
     assert "count=3" in got["a"] and "count=2" in got["b"]
@@ -51,8 +74,51 @@ def test_unique_detects_duplicates(spark):
 def test_referential_orphans(spark):
     child = spark.createDataFrame(pd.DataFrame({"clip_id": ["a", "b", "x", "y", "b"]}))
     parent = spark.createDataFrame(pd.DataFrame({"clip_id": ["a", "b", "c"]}))
-    v = check_referential(child, parent, n_partitions=4).collect()
+    v = key_violations({"child": child, "parent": parent}, "clip_id", [_fk_in_pk()], n_partitions=4).collect()
     assert sorted(r["clip_id"] for r in v) == ["x", "y"]
+
+
+def test_key_violations_two_sides_plan_has_no_join(spark):
+    """Two sides → union + ONE groupBy(key): no join (so no hash-join build
+    side) and exactly one exchange."""
+    child = spark.createDataFrame([("a",), ("x",)], "clip_id string")
+    parent = spark.createDataFrame([("a",), ("b",)], "clip_id string")
+    df = key_violations({"child": child, "parent": parent}, "clip_id", [_fk_in_pk()], n_partitions=4)
+    p = df._jdf.queryExecution().executedPlan()
+    plan = p.initialPlan() if p.nodeName() == "AdaptiveSparkPlan" else p
+    names = []
+
+    def walk(node):
+        names.append(node.nodeName())
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(plan)
+    assert not [n for n in names if "Join" in n], names
+    assert sum("Exchange" in n for n in names) == 1, names
+    assert "Join" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_verdict_rows_pass_rows_and_dropped_counts():
+    """Every check gets a row per partition of the totals — an explicit PASS
+    row where no violation was counted — and counts for a partition missing
+    from the totals are dropped, as a grid-left-join-counts plan drops them."""
+    got = verdict_rows(
+        ["c1", "c2"],
+        {0: 10, 1: 5},
+        {("c1", 0): 3, ("c2", 7): 4},
+    )
+    assert got == [
+        {"check_name": "c1", "partition_id": 0, "passed": False,
+         "violation_count": 3, "rows_checked": 10, "detail": None},
+        {"check_name": "c1", "partition_id": 1, "passed": True,
+         "violation_count": 0, "rows_checked": 5, "detail": None},
+        {"check_name": "c2", "partition_id": 0, "passed": True,
+         "violation_count": 0, "rows_checked": 10, "detail": None},
+        {"check_name": "c2", "partition_id": 1, "passed": True,
+         "violation_count": 0, "rows_checked": 5, "detail": None},
+    ]
 
 
 def test_seeded_corruptions_expected_verdicts(spark):
@@ -67,11 +133,10 @@ def test_seeded_corruptions_expected_verdicts(spark):
     exp_dup_rows = len([i for i in range(1, N) if i % 33 == 0 and i % 50 != 0])
     exp_null_tr = len([i for i in range(1, N) if i % 40 == 0])
 
-    vio = (
-        check_pk_not_null(clips)
-        .unionByName(check_unique(clips, n_partitions=8))
-        .unionByName(check_not_null(clips, "transcript"))
-    )
+    vio = row_level_violations(
+        clips,
+        [_pk_not_null(), _not_null("transcript", "transcript_not_null", "null or empty transcript")],
+    ).unionByName(key_violations({"clips": clips}, "clip_id", [_pk_unique()], n_partitions=8))
     got = _counts(vio)
     assert got["pk_not_null"] == exp_null
     assert got["pk_unique"] == exp_dup_rows  # each dup key duplicated once
@@ -95,7 +160,9 @@ def test_seeded_corruptions_expected_verdicts(spark):
 
 def test_clean_table_all_pass(spark):
     clips = with_partition_id(fixtures.generate_clips(spark, 100, seed=SEED), 4)
-    vio = check_pk_not_null(clips).unionByName(check_unique(clips, n_partitions=4))
+    vio = row_level_violations(clips, [_pk_not_null()]).unionByName(
+        key_violations({"clips": clips}, "clip_id", [_pk_unique()], n_partitions=4)
+    )
     totals = clips.groupBy("partition_id").agg(F.count(F.lit(1)).alias("rows_checked"))
     verd = verdicts(vio, totals, ["pk_not_null", "pk_unique"])
     assert verd.filter(~F.col("passed")).count() == 0
@@ -301,6 +368,26 @@ def test_validate_upload_directory_headers_seeded_violations(spark, tmp_path):
     assert ("inbound_sku_in_item_master", "zzz") in got
     assert ("order_details_order_in_header", "O9") in got
     assert len(got) == 4  # nothing else fires
+
+
+def test_validate_upload_directory_seeded_job_and_stage_budget(spark, count_jobs, tmp_path):
+    """The seeded-bad directory's violations collect, reads and pinned
+    frames included, runs at most 19 jobs and 23 stages (8 cores, 8 shuffle
+    partitions): its five FK ⊆ PK checks are three key_violations groupBys.
+    Five anti-joins ran 28-29 jobs and 34-35 stages."""
+    from data_profiler_spark.functions.windows import release_cumsum_caches
+    from data_profiler_spark.sources.csvio import validate_upload_directory
+
+    _write_headers_dir(tmp_path, break_things=True)
+    try:
+        rows, jobs, stages = count_jobs(
+            lambda: validate_upload_directory(spark, str(tmp_path), "headers")[1].collect()
+        )
+    finally:
+        release_cumsum_caches()
+    assert len(rows) == 4
+    assert jobs <= 19, jobs
+    assert stages <= 23, stages
 
 
 def test_whitespace_key_passes_falsy_check_like_reference(spark):

@@ -203,3 +203,51 @@ def test_histograms_multi_equals_per_column_histogram(spark, edges, values):
         for k, n in zip(*np.unique(b.astype(int), return_counts=True)):
             single[(c, int(k))] = int(n)
     assert multi == single
+
+
+_side = st.lists(st.sampled_from(["a", "b", "c", "d", "e", None]), max_size=12)
+
+
+@given(left=_side, right=_side)
+@settings(max_examples=12, deadline=None)
+def test_key_violations_equal_set_logic(spark, left, right):
+    """The side-tagged groupBy ≡ pure-Python set logic for uniqueness and
+    both FK directions, over sides with NULL keys, duplicates and empty
+    sides: one row per distinct failing key, NULL keys never reported, and
+    each key in the with_partition_id bucket its rows land in."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from data_profiler_spark.checks import key_violations, with_partition_id
+
+    def frame(keys):
+        return spark.createDataFrame([(k,) for k in keys], "k string")
+
+    n_left, n_right = F.col("left"), F.col("right")
+    got = key_violations(
+        {"left": frame(left), "right": frame(right)},
+        "k",
+        [
+            ("left_unique", n_left > 1, F.concat(F.lit("count="), n_left)),
+            ("left_in_right", (n_left > 0) & (n_right == 0), F.lit("orphan")),
+            ("right_in_left", (n_right > 0) & (n_left == 0), F.lit("orphan")),
+        ],
+        n_partitions=4,
+    ).collect()
+
+    counts = Counter(k for k in left if k is not None)
+    lkeys, rkeys = set(counts), {k for k in right if k is not None}
+    expected = (
+        {("left_unique", k, f"count={n}") for k, n in counts.items() if n > 1}
+        | {("left_in_right", k, "orphan") for k in lkeys - rkeys}
+        | {("right_in_left", k, "orphan") for k in rkeys - lkeys}
+    )
+    rows = [(r["check_name"], r["clip_id"], r["detail"]) for r in got]
+    assert len(rows) == len(expected) and set(rows) == expected
+
+    pids = {
+        r["k"]: r["partition_id"]
+        for r in with_partition_id(frame(sorted(lkeys | rkeys)), 4, key="k").collect()
+    }
+    assert all(r["partition_id"] == pids[r["clip_id"]] for r in got)

@@ -219,6 +219,32 @@ def test_avi_short_video_strf_raises():
         vc.decode_avi(bytes(out))
 
 
+def test_avi_interleaved_rec_lists_decode_like_flat():
+    """An interleaved AVI groups its movi chunks in LIST 'rec ' sub-lists
+    (one per interleave step, here holding 2, 1 and 2 frames): the walker
+    must descend into them and recover the flat file's frames."""
+    fr = _frames(5, 3, 4, seed=11)
+    b = vc.encode_avi(fr, fps=10.0)
+    movi_at = b.find(b"movi") - 8
+    movi_size = struct.unpack_from("<I", b, movi_at + 4)[0]
+    frame_chunk = 8 + struct.unpack_from("<I", b, movi_at + 16)[0]
+    chunks = [
+        b[pos : pos + frame_chunk]
+        for pos in range(movi_at + 12, movi_at + 8 + movi_size, frame_chunk)
+    ]
+    recs = b"".join(
+        b"LIST" + struct.pack("<I", 4 + len(body)) + b"rec " + body
+        for body in (chunks[0] + chunks[1], chunks[2], chunks[3] + chunks[4])
+    )
+    movi = b"LIST" + struct.pack("<I", 4 + len(recs)) + b"movi" + recs
+    out = bytearray(b[:movi_at] + movi + b[movi_at + 8 + movi_size :])
+    struct.pack_into("<I", out, 4, len(out) - 8)
+    dec, fps = vc.decode_avi(bytes(out))
+    flat, _ = vc.decode_avi(b)
+    assert np.array_equal(dec, flat) and np.array_equal(dec, fr)
+    assert fps == pytest.approx(10.0)
+
+
 def test_avi_tiny_fps_raises_valueerror_not_zerodivision():
     with pytest.raises(ValueError, match="avi:"):
         vc.encode_avi(_frames(1, 2, 2), fps=1e-4)
