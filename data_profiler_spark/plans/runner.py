@@ -18,8 +18,10 @@ Dataflow (all checks share ONE decode pass and ONE persisted stats frame):
           │   both referential directions from ONE groupBy over clip ids
           │   tagged by side) [persist] → append, count per check×partition
           ├─► profile: ONE groupBy(partition_id) agg — row count, column
-          │   profile, KLL sketch per SKETCH_COLUMNS column
-          └─► drift: histograms binned with the baseline's edges → PSI/KS
+          │   profile (one GK quartile sketch per numeric column), KLL
+          │   sketch per SKETCH_COLUMNS column
+          └─► drift: ONE histograms_multi groupBy — numeric columns binned
+              with the baseline's edges, codec by stable-hash bucket → PSI/KS
     then verdicts (checks × partitions grid, built driver-side), profile,
     sketches and drift appended concurrently; the manifest commit is last.
 
@@ -51,11 +53,7 @@ from data_profiler_spark.checks.constraints import (
 from data_profiler_spark.drift import drift_from_hist_rows
 from data_profiler_spark.functions.frames import local_frame
 from data_profiler_spark.plans.manifest import Manifest
-from data_profiler_spark.profiling import (
-    categorical_histogram,
-    column_profile_collected,
-    histograms_multi,
-)
+from data_profiler_spark.profiling import column_profile_collected, histograms_multi
 from data_profiler_spark.schemas import VERDICT_SCHEMA, VIOLATION_SCHEMA
 from data_profiler_spark.sources.tableio import TableIO
 
@@ -83,8 +81,8 @@ DUR_TOL_MS = 5.0
 # full decode run, same as the Describer profiling every selected column
 # (reference data_profiler.py:523-601), not one hand-picked histogram.
 DRIFT_COLUMNS = ["dur_ms", "decoded_ms", "rms"]
-# Categorical columns scored by category-mix PSI (stable-hash buckets —
-# profiling.categorical_histogram): a codec-mix shift changes decode cost
+# Categorical columns scored by category-mix PSI (stable-hash buckets — a
+# histograms_multi spec with nbins 0): a codec-mix shift changes decode cost
 # and skew assumptions long before any numeric stat moves.
 DRIFT_CATEGORICALS = ["codec"]
 
@@ -190,14 +188,17 @@ class ValidationRun:
         self, clips: DataFrame | None, stats: DataFrame | None = None
     ) -> None:
         """Persist the drift baseline: one histogram per DRIFT_COLUMNS column
-        with data-derived edges, plus the edges themselves (baseline_meta) so
-        every later run bins its current histograms identically.
+        with data-derived edges and one per DRIFT_CATEGORICALS column, plus
+        the specs themselves (baseline_meta: lo/hi/nbins, nbins 0 for a
+        categorical) so every later run bins its current histograms
+        identically.
 
         Runs one decode pass (decoded_ms/rms are decode outputs) and one
         min/max agg to derive edges, then ONE scan for all histograms
-        (histograms_multi). The upper edge is padded so the observed max
-        lands in the last interior bucket, not the overflow bucket — bucket
-        nbins+1 stays reserved for values genuinely beyond the baseline.
+        (histograms_multi over the one spec dict the meta rows are written
+        from). The upper edge is padded so the observed max lands in the
+        last interior bucket, not the overflow bucket — bucket nbins+1 stays
+        reserved for values genuinely beyond the baseline.
 
         ``stats``: a pre-computed decode-stats frame (must carry the
         DRIFT_COLUMNS + DRIFT_CATEGORICALS columns). When provided, the
@@ -219,12 +220,13 @@ class ValidationRun:
                 *[F.min(c).cast("double").alias(f"lo_{c}") for c in DRIFT_COLUMNS],
                 *[F.max(c).cast("double").alias(f"hi_{c}") for c in DRIFT_COLUMNS],
             ).collect()[0]
-            specs: dict[str, tuple[float, float, int]] = {}
+            specs: dict[str, tuple[float | None, float | None, int]] = {}
             for c in DRIFT_COLUMNS:
                 lo = mm[f"lo_{c}"] if mm[f"lo_{c}"] is not None else 0.0
                 hi = mm[f"hi_{c}"] if mm[f"hi_{c}"] is not None else lo + 1.0
                 hi = hi + max((hi - lo) * 1e-6, 1e-9)
                 specs[c] = (lo, hi, DUR_HIST_BINS)
+            specs.update({c: (None, None, 0) for c in DRIFT_CATEGORICALS})
             # Both tables carry the same baseline_id: they are two
             # non-atomic overwrites, and a crash between them would
             # otherwise pair a new histogram with stale (or missing) edges —
@@ -232,14 +234,11 @@ class ValidationRun:
             # refuses mismatched ids instead of scoring garbage.
             bid = uuid.uuid4().hex[:16]
             hist = histograms_multi(stats, specs)
-            for c in DRIFT_CATEGORICALS:
-                hist = hist.unionByName(categorical_histogram(stats, c))
             # meta FIRST: a crash after meta-only leaves baseline_hist
             # absent → drift is skipped entirely (the safe failure).
             meta = local_frame(
                 self.spark,
-                [(c, *specs[c], bid) for c in DRIFT_COLUMNS]
-                + [(c, None, None, 0, bid) for c in DRIFT_CATEGORICALS],
+                [(c, *spec, bid) for c, spec in specs.items()],
                 "column string, lo double, hi double, nbins int, baseline_id string",
             )
             self.io.overwrite(meta, "baseline_meta")
@@ -564,11 +563,12 @@ class ValidationRun:
     def _drift(self, stats: DataFrame, baseline) -> list[dict] | None:
         """PSI + binned-KS rows per baseline column vs ``baseline`` (from
         :meth:`_read_baseline`). Current histograms are binned with the
-        BASELINE's persisted edges (baseline_meta) — all numeric columns in
-        one scan of the stats cache. The histogram aggregations run
-        distributed; the comparison is ≤ nbins+2 rows per column, so it is
-        computed driver-side (drift_from_hist_rows) instead of as a Spark
-        job."""
+        BASELINE's persisted specs (baseline_meta) — every column, numeric
+        and categorical, in one histograms_multi scan of the stats cache.
+        The histogram aggregation runs distributed; the comparison is
+        ≤ nbins+2 rows per numeric column (one per category for a
+        categorical), so it is computed driver-side (drift_from_hist_rows)
+        instead of as a Spark job."""
         if baseline is None:
             return None
         base_rows, meta_rows = baseline
@@ -583,11 +583,7 @@ class ValidationRun:
                 "write_baseline crashed between its two table writes; "
                 "re-run write_baseline"
             )
-        specs = {r["column"]: (r["lo"], r["hi"], r["nbins"]) for r in meta_rows if r["nbins"] > 0}
-        cur = histograms_multi(stats, specs)
-        for r in meta_rows:
-            if r["nbins"] == 0:  # categorical (stable-hash buckets)
-                cur = cur.unionByName(categorical_histogram(stats, r["column"]))
+        cur = histograms_multi(stats, {r.column: (r.lo, r.hi, r.nbins) for r in meta_rows})
         return drift_from_hist_rows(cur.collect(), base_rows)
 
 

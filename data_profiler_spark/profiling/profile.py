@@ -12,12 +12,14 @@ table, regardless of column count:
 
 - pass 1 (:func:`column_profile`): one ``agg`` computing count / null_count /
   distinct (HLL++ ``approx_count_distinct``) / min / max / mean / stddev /
-  approx quantiles (Greenwald-Khanna sketch, the "t-digest-style" north-star
-  requirement — mergeable, bounded-error) for every column at once. Map-side
-  partial aggregation means the shuffle carries sketches, not rows.
+  approx quartiles for every column at once. Each numeric column keeps ONE
+  Greenwald-Khanna sketch (``percentile_approx`` over [.25, .5, .75]) that
+  answers all three quartiles. Map-side partial aggregation means the
+  shuffle carries sketches, not rows.
 - pass 2 (:func:`outlier_counts` + :func:`histograms_multi`):
-  fence-dependent conditional counts and width_bucket histograms, again one
-  fused ``agg``.
+  fence-dependent conditional counts, and histograms of numeric
+  (width_bucket) and categorical (stable-hash bucket) columns in one
+  explode + groupBy.
 
 Both support an optional grouping column, which is how per-partition
 profiles are computed (one shuffle keyed by partition — no driver loop).
@@ -66,10 +68,11 @@ def _profile_exprs(df: DataFrame, columns: list[str]) -> tuple[list[Column], lis
                 ("max", F.max(col).cast("double")),
                 ("mean", F.avg(col)),
                 ("stddev", F.stddev_samp(col)),
-                ("q25", F.percentile_approx(col, F.lit(0.25), F.lit(QUANTILE_ACCURACY)).cast("double")),
-                ("q50", F.percentile_approx(col, F.lit(0.5), F.lit(QUANTILE_ACCURACY)).cast("double")),
-                ("q75", F.percentile_approx(col, F.lit(0.75), F.lit(QUANTILE_ACCURACY)).cast("double")),
             ]
+            # one GK sketch answers all three quartiles: the three element
+            # reads share one aggregate, so Catalyst keeps one buffer
+            qs = F.percentile_approx(col, [0.25, 0.5, 0.75], QUANTILE_ACCURACY)
+            base += [(m, qs[i]) for i, m in enumerate(("q25", "q50", "q75"))]
         for m, e in base:
             exprs.append(e.cast("double").alias(f"{c}__{m}"))
             manifest.append((c, m, num))
@@ -229,60 +232,41 @@ def outlier_counts(
     return wide.select(*keep, F.expr(stack_expr))
 
 
-def categorical_histogram(df: DataFrame, column: str) -> DataFrame:
-    """HISTOGRAM_SCHEMA rows for a CATEGORICAL column: bucket = stable hash
-    of the value (pmod(xxhash64, 2^31−2) + 1; nulls → bucket 0), lo/hi null.
-
-    Current and baseline frames built with this share bucket ids per
-    category, so the PSI histogram pipeline scores category-mix shift
-    (e.g. codec mix) with no code change. Caveat: a 31-bit hash collision
-    between two distinct categories merges their buckets, masking mix
-    drift between exactly those two categories (birthday bound: ~1e-6 at
-    ~65 categories; codec-style columns have tens). Note: the binned-KS
-    statistic over these buckets uses an arbitrary-but-stable order — PSI
-    is the meaningful score for categoricals; KS is reported only because
-    the drift row schema carries it.
-    """
-    b = F.when(F.col(column).isNull(), F.lit(0)).otherwise(
-        F.pmod(F.xxhash64(F.col(column)), F.lit(2_147_483_646)) + 1
-    )
-    return (
-        df.groupBy(b.cast("int").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .select(
-            F.lit(column).alias("column"),
-            "bucket",
-            F.lit(None).cast("double").alias("lo"),
-            F.lit(None).cast("double").alias("hi"),
-            F.col("count"),
-        )
-    )
-
-
 def histograms_multi(
     df: DataFrame,
-    specs: dict[str, tuple[float, float, int]],
+    specs: dict[str, tuple[float | None, float | None, int]],
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Equi-width histograms for SEVERAL columns in ONE scan.
+    """Histograms for SEVERAL columns in ONE scan.
 
     ``specs``: column → (lo, hi, nbins), each column binned with its own
     edges but all counted in a single pass — each row explodes into one
-    (column, bucket) entry per non-null spec column, then one groupBy. N
-    per-column histogram passes would scan the table N times; at 10^12 rows
-    the scan IS the cost, so the drift path (dur_ms, decoded_ms, rms) uses
-    this. Output is HISTOGRAM_SCHEMA: bucket 0 = underflow, nbins+1 =
-    overflow (width_bucket semantics), so a drifted distribution cannot
-    silently fall off the histogram — the Describer's px.histogram
-    (data_profiler.py:582-588) and the PSI input.
+    (column, bucket) entry per spec column, then one groupBy. N per-column
+    histogram passes would scan the table N times; at 10^12 rows the scan
+    IS the cost, so the drift path (dur_ms, decoded_ms, rms, codec) uses
+    this. Output is HISTOGRAM_SCHEMA.
+
+    - ``nbins > 0``: equi-width over [lo, hi). Bucket 0 = underflow,
+      nbins+1 = overflow (width_bucket semantics), so a drifted
+      distribution cannot silently fall off the histogram — the
+      Describer's px.histogram (data_profiler.py:582-588) and the PSI
+      input. NULLs are not counted.
+    - ``nbins == 0`` (lo/hi ignored): CATEGORICAL. The bucket is a stable
+      hash of the value, pmod(xxhash64(v), 2^31−2) + 1, NULL → bucket 0,
+      and lo/hi are NULL. Current and baseline histograms share bucket ids
+      per category, so PSI scores category-mix shift (e.g. codec mix).
+      A 31-bit collision between two categories merges their buckets,
+      masking mix drift between exactly those two (birthday bound ~1e-6 at
+      ~65 categories). Binned KS over these buckets uses an arbitrary but
+      stable order: PSI is the meaningful score for a categorical.
 
     Buckets are materialized behind a projection boundary before the
     explode — Catalyst re-inlines referenced subtrees per use site, so
-    computing width_bucket inside the struct would evaluate it once per
+    computing a bucket inside the struct would evaluate it once per
     struct field.
     """
     group_cols = group_cols or []
-    if not specs:  # e.g. a baseline_meta holding only categorical columns
+    if not specs:  # nothing to bin (explode needs at least one entry)
         # schema must match the non-empty path exactly: group columns in
         # group_cols ORDER (not df order), and an unknown name fails here
         # just as it would fail the groupBy
@@ -294,40 +278,37 @@ def histograms_multi(
         return df.sparkSession.createDataFrame(
             [], gc_ddl + "column string, bucket int, lo double, hi double, count long"
         )
-    edges: dict[str, tuple[float, float, int, float]] = {}
+    buckets: dict[str, Column] = {}
+    edges: dict[str, tuple[float, float]] = {}  # numeric column → (lo, width)
     for c, (lo, hi, nb) in specs.items():
-        lo, hi = float(lo), float(hi)
+        if nb == 0:
+            buckets[c] = F.when(F.col(c).isNull(), F.lit(0)).otherwise(
+                F.pmod(F.xxhash64(F.col(c)), F.lit(2_147_483_646)) + 1
+            )
+            continue
+        lo, hi, nb = float(lo), float(hi), int(nb)
         if hi <= lo:
             hi = lo + 1.0
-        edges[c] = (lo, hi, int(nb), (hi - lo) / int(nb))
-    proj = df.select(
-        *group_cols,
-        *[
-            F.width_bucket(
-                F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(nb)
-            ).cast("int").alias(f"__b_{c}")
-            for c, (lo, hi, nb, _w) in edges.items()
-        ],
-    )
+        buckets[c] = F.width_bucket(F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(nb))
+        edges[c] = (lo, (hi - lo) / nb)
+    proj = df.select(*group_cols, *[b.cast("int").alias(f"__b_{c}") for c, b in buckets.items()])
     entries = [
         F.when(
             F.col(f"__b_{c}").isNotNull(),
             F.struct(F.lit(c).alias("column"), F.col(f"__b_{c}").alias("bucket")),
         )
-        for c in edges
+        for c in buckets
     ]
     counts = (
         proj.select(*group_cols, F.explode(F.array_compact(F.array(*entries))).alias("__e"))
         .groupBy(*group_cols, F.col("__e.column").alias("column"), F.col("__e.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    lo_expr = hi_expr = None
-    for c, (lo, _hi, _nb, w) in edges.items():
-        this_lo = F.lit(lo) + (F.col("bucket") - 1) * F.lit(w)
-        this_hi = F.lit(lo) + F.col("bucket") * F.lit(w)
+    lo_expr = hi_expr = F.lit(None).cast("double")
+    for c, (lo, w) in edges.items():
         cond = F.col("column") == c
-        lo_expr = this_lo if lo_expr is None else F.when(cond, this_lo).otherwise(lo_expr)
-        hi_expr = this_hi if hi_expr is None else F.when(cond, this_hi).otherwise(hi_expr)
+        lo_expr = F.when(cond, F.lit(lo) + (F.col("bucket") - 1) * F.lit(w)).otherwise(lo_expr)
+        hi_expr = F.when(cond, F.lit(lo) + F.col("bucket") * F.lit(w)).otherwise(hi_expr)
     return counts.select(
         *[F.col(g) for g in group_cols],
         "column",

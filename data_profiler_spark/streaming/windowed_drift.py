@@ -16,6 +16,7 @@ value is the stream lifecycle itself):
                    ∪ baseline replicated per window   (≤ nbins × windows)
                    → pair_histograms → drift_paired
                      (group_cols=[window_start, window_end])
+                   → left-anti join with the table's window keys
                    → io.append(table)
 
 Scale notes: the stream state is O(open windows × buckets) thanks to the
@@ -23,9 +24,11 @@ watermark; a batch's drift math pairs two ≤(nbins+2)×windows-row frames in
 one groupBy and scores them in one window pass — metadata at any data
 scale. Scores and verdicts follow drift.py's rules (PSI_THRESHOLD,
 KS_THRESHOLD; an empty side scores NULL and fails). Append output mode
-means each window is scored exactly once, when it closes; a replayed batch
-re-appends the same rows keyed by the same window (dedupe on read via the
-window key if the sink table must be strictly unique).
+means each window is emitted exactly once, when it closes, so (window_start,
+window_end, column) is a key of the sink table. A micro-batch replayed after
+a crash between its append and its checkpoint commit emits the same windows
+again; the sink drops every window the table already holds, so the replay
+appends nothing.
 """
 
 from __future__ import annotations
@@ -111,6 +114,9 @@ def windowed_drift_stream(
             "psi_passed",
             "ks_passed",
         )
+        if io.exists(spark, table):
+            key = [*group, "column"]
+            out = out.join(io.read(spark, table).select(*key), key, "left_anti")
         io.append(out, table)
 
     q = (

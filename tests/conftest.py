@@ -25,7 +25,9 @@ def count_jobs(spark):
     """``count_jobs(fn)`` → (fn(), jobs, stages): the Spark jobs ``fn`` ran
     outside any job group — every job the engine submits — and their stages,
     skipped ones included (read from ``sc.statusTracker()``, so it works
-    with the UI off)."""
+    with the UI off). Raises if ``fn`` ran no such job: every budgeted call
+    runs at least one, so a count of 0 means the jobs went uncounted (into
+    a job group, say), and a budget must not pass on it."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()  # the tracker is fed through it
     tracker = sc.statusTracker()
@@ -36,6 +38,8 @@ def count_jobs(spark):
         out = fn()
         bus.waitUntilEmpty()
         new = set(tracker.getJobIdsForGroup()) - before
+        if not new:
+            raise AssertionError("count_jobs: fn ran no job outside a job group")
         return out, len(new), sum(len(tracker.getJobInfo(j).stageIds) for j in new)
 
     return count

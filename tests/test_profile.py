@@ -4,6 +4,8 @@ the Spark implementation on small frames (SURVEY.md §5.2 item 2)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -135,3 +137,41 @@ def test_histograms_multi_matches_per_column(sdf, pdf):
         for k, n in zip(*np.unique(b.astype(int), return_counts=True)):
             single[(c, int(k))] = (int(n), round(lo + (k - 1) * w, 9), round(lo + k * w, 9))
     assert multi == single
+
+
+def test_runner_profile_agg_keeps_one_gk_sketch_per_numeric_column(spark, tmp_io, monkeypatch):
+    """The three quartiles of a numeric column are element reads of ONE
+    percentile_approx, so the executed plan of the runner's profile agg
+    holds exactly one GK aggregate per numeric column (in each of its
+    partial and final aggregation nodes), not one per quartile."""
+    import re
+
+    from data_profiler_spark import fixtures
+    from data_profiler_spark.plans.runner import ValidationRun
+
+    clips = fixtures.generate_clips(spark, 64, seed=5)
+    frame_cls = type(clips)
+    real_collect = frame_cls.collect
+    plans: list[str] = []
+
+    def collect(self):
+        rows = real_collect(self)
+        # maxFields unbounded: the default truncates the 90-function list
+        plans.append(self._jdf.queryExecution().executedPlan().treeString(False, False, 2**31 - 1, False, False))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", collect)
+    res = ValidationRun(spark, tmp_io, n_partitions=4).run(clips)
+    monkeypatch.undo()
+    try:
+        numeric = {r["column"] for r in res.profile.collect() if r["metric"] == "q50"}
+    finally:
+        res.violations.unpersist()
+    assert numeric == {"sr_hz", "dur_ms", "decoded_ms", "rms", "peak", "clip_ratio", "zero_cross_rate"}
+    agg_lines = [
+        line for plan in plans for line in plan.splitlines() if "percentile_approx(" in line
+    ]
+    assert agg_lines, "no collect of the run planned a percentile_approx"
+    for line in agg_lines:
+        per_col = Counter(re.findall(r"percentile_approx\((?:cast\()?(\w+)#", line))
+        assert per_col == {c: 1 for c in numeric}, line

@@ -171,38 +171,51 @@ def test_wav_sample_rate_walks_any_chunk_layout(pcm, sr, pre_chunks):
         max_size=3,
     ),
     values=st.lists(
-        st.floats(min_value=-2e6, max_value=2e6, allow_nan=False),
+        st.tuples(
+            st.floats(min_value=-2e6, max_value=2e6, allow_nan=False),
+            st.sampled_from(["mp3", "wav", "flac", "", None]),
+        ),
         min_size=0,
         max_size=200,
     ),
 )
 @settings(max_examples=15, deadline=None)
 def test_histograms_multi_equals_per_column_histogram(spark, edges, values):
-    """One-scan multi-column binning ≡ a per-column numpy width_bucket
-    reference for arbitrary edges and data (the binning the drift gate
-    rests on): 0 below lo, nbins+1 at/above hi, else
-    floor(nbins·(v−lo)/(hi−lo)) + 1, evaluated in that order as Spark does."""
-    import pandas as pd
+    """One-scan multi-column binning ≡ a per-column reference for arbitrary
+    edges and data (the binning the drift gate rests on). Numeric specs
+    match numpy's width_bucket: 0 below lo, nbins+1 at/above hi, else
+    floor(nbins·(v−lo)/(hi−lo)) + 1, evaluated in that order as Spark does.
+    A categorical spec (nbins 0) over a string column with NULLs counts the
+    NULLs in bucket 0, one bucket per distinct value otherwise, with NULL
+    lo/hi."""
+    from collections import Counter
 
     from data_profiler_spark.profiling import histograms_multi
 
     cols = [f"c{i}" for i in range(len(edges))]
-    pdf = pd.DataFrame({c: pd.Series(values, dtype="float64") for c in cols})
-    if len(pdf) == 0:
-        pdf = pd.DataFrame({c: pd.Series([], dtype="float64") for c in cols})
-    df = spark.createDataFrame(pdf, ", ".join(f"{c} double" for c in cols))
+    nums = [v for v, _ in values]
+    cats = [c for _, c in values]
+    df = spark.createDataFrame(
+        [(*[v] * len(cols), c) for v, c in values],
+        ", ".join(f"{c} double" for c in cols) + ", cat string",
+    )
     specs = {c: (lo, lo + width, nb) for c, (lo, width, nb) in zip(cols, edges)}
-    multi = {
-        (r["column"], r["bucket"]): r["count"]
-        for r in histograms_multi(df, specs).collect()
-    }
+    rows = histograms_multi(df, {**specs, "cat": (None, None, 0)}).collect()
+    multi = {(r["column"], r["bucket"]): r["count"] for r in rows if r["column"] != "cat"}
     single = {}
-    v = np.asarray(values, dtype=np.float64)
+    v = np.asarray(nums, dtype=np.float64)
     for c, (lo, hi, nb) in specs.items():
         b = np.where(v < lo, 0, np.where(v >= hi, nb + 1, np.floor(nb * (v - lo) / (hi - lo)) + 1))
         for k, n in zip(*np.unique(b.astype(int), return_counts=True)):
             single[(c, int(k))] = int(n)
     assert multi == single
+
+    cat = [r for r in rows if r["column"] == "cat"]
+    assert all(r["lo"] is None and r["hi"] is None for r in cat)
+    n_null = cats.count(None)
+    assert [r["count"] for r in cat if r["bucket"] == 0] == ([n_null] if n_null else [])
+    seen = Counter(c for c in cats if c is not None)
+    assert sorted(r["count"] for r in cat if r["bucket"] != 0) == sorted(seen.values())
 
 
 _side = st.lists(st.sampled_from(["a", "b", "c", "d", "e", None]), max_size=12)

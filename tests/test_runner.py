@@ -382,6 +382,29 @@ def test_run_job_budget_and_phases(spark, tmp_io, count_jobs):
         res.violations.unpersist()
 
 
+# Spark jobs and stages of the same run against a seeded baseline: the
+# drift fold (the baseline read and one histograms_multi collect over the
+# numeric and categorical columns) on top of RUN_JOB_BUDGET's run. A budget
+# may only go down; raising it needs a CHANGES.md line saying why.
+DRIFT_RUN_JOB_STAGE_BUDGET = (22, 42)
+
+
+def test_drift_run_job_and_stage_budget(spark, tmp_io, count_jobs):
+    corr = fixtures.Corruptions(null_clip_id_every=47, duplicate_clip_id_every=31)
+    clips = fixtures.generate_clips(spark, 200, seed=SEED, corruptions=corr)
+    tr = fixtures.generate_transcripts(spark, 200, seed=SEED, orphan_every=61, missing_every=71)
+    run = ValidationRun(spark, tmp_io, n_partitions=PARTS)
+    run.write_baseline(clips)
+    res, jobs, stages = count_jobs(lambda: run.run(clips, transcripts=tr))
+    try:
+        assert {r["column"] for r in res.drift.collect()} == {"dur_ms", "decoded_ms", "rms", "codec"}
+        job_budget, stage_budget = DRIFT_RUN_JOB_STAGE_BUDGET
+        assert jobs <= job_budget, f"{jobs} jobs > budget {job_budget}"
+        assert stages <= stage_budget, f"{stages} stages > budget {stage_budget}"
+    finally:
+        res.violations.unpersist()
+
+
 def test_failed_output_write_commits_nothing_and_leaks_no_cache(
     spark, tmp_io, corrupted, monkeypatch
 ):

@@ -304,6 +304,45 @@ def test_windowed_drift_scores_closed_windows(spark, dirs):
     assert str(t0 + 10 * m) in starts
 
 
+def test_windowed_drift_replayed_batch_appends_nothing(spark, dirs):
+    """A micro-batch replayed after a crash between the sink's append and
+    the checkpoint commit re-emits the windows it already scored; the sink
+    appends none of them again. The replay is forced by deleting the last
+    commits/<n> file, so the next drain re-runs batch n with the same id."""
+    import datetime as dt
+    import os
+
+    from data_profiler_spark.profiling import histograms_multi
+    from data_profiler_spark.streaming.windowed_drift import windowed_drift_stream
+
+    in_dir, cp = dirs
+    schema = "event_id long, ts timestamp, value double"
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    m = dt.timedelta(minutes=1)
+    rows = [(i, t0 + (i % 3) * m + dt.timedelta(seconds=i % 50), float(i % 10)) for i in range(90)]
+    rows += [(1000, t0 + 10 * m, 5.0)]  # advances the watermark past 12:00-12:03
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(in_dir)
+    base_df = spark.range(200).select((F.col("id") % 10).cast("double").alias("value"))
+    baseline = histograms_multi(base_df, {"value": (0.0, 10.0, 10)})
+
+    def drain():
+        return windowed_drift_stream(
+            spark, in_dir, schema, "ts", "value", baseline, cp,
+            lo=0.0, hi=10.0, nbins=10,
+            window_size="1 minute", watermark_delay="2 minutes",
+        ).collect()
+
+    first = sorted(str(r["window_start"]) for r in drain())
+    assert first == [str(t0 + k * m) for k in range(3)]
+    commits = os.path.join(cp, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):  # the local fs keeps a checksum beside it
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    starts = [str(r["window_start"]) for r in drain()]
+    assert sorted(starts) == first
+
+
 def test_stream_dedup_drops_rearrivals_across_batches(spark, dirs):
     """dedup_doc_stream: a re-arrival of already-seen content in a LATER
     micro-batch run is dropped (state survives via the checkpoint); novel
