@@ -129,61 +129,21 @@ def encode_pcm16(pcm: np.ndarray, codec: str, sr: int) -> bytes:
     raise ValueError(f"unsupported codec {codec!r}")
 
 
-# Spectral stats window: 16384 samples ≈ 1s @16kHz. Bounded per-clip cost;
-# the dominant-bin estimate is unchanged for stationary tones.
-_SPEC_WINDOW = 16384
-
-_HANN_CACHE: dict[int, np.ndarray] = {}
-
-
-def _hann(n: int) -> np.ndarray:
-    w = _HANN_CACHE.get(n)
-    if w is None:
-        w = np.hanning(n)
-        if len(_HANN_CACHE) < 4096:  # clip lengths cluster; bound the cache
-            _HANN_CACHE[n] = w
-    return w
-
-
 def _clip_stats(x: np.ndarray, sr: int) -> dict:
     """Per-clip metrics from decoded float32 PCM. Pure numpy, no allocation
     proportional to anything but the clip itself."""
     n = len(x)
     sr_eff = int(sr) if sr and sr > 0 else 16000
-    row = {
+    ax = np.abs(x)
+    return {
         "n_samples": n,
         "decoded_ms": 1000.0 * n / sr_eff,
         # BLAS dot instead of an n-sized float64 square allocation.
         "rms": float(np.sqrt(np.dot(x, x) / n)),
         "zero_cross_rate": float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))) if n > 1 else 0.0,
-        "snr_db_vs_sine": None,
+        "peak": float(ax.max()),
+        "clip_ratio": float(np.count_nonzero(ax > 0.999) / n),
     }
-    ax = np.abs(x)
-    row["peak"] = float(ax.max())
-    row["clip_ratio"] = float(np.count_nonzero(ax > 0.999) / n)
-    # Tonal SNR proxy: energy of the dominant rFFT bin family vs the
-    # rest, over a FIXED-length window (O(1) per clip regardless of
-    # dur_ms — otherwise a 15s/44.1kHz clip costs ~50× a median clip
-    # and re-creates exactly the duration skew the salting fights).
-    if n >= 16:
-        seg = x[:_SPEC_WINDOW]
-        # Zero-pad to the next power of two: pocketfft's pow-2 path is
-        # 2-4x faster than awkward composite/prime lengths, and the FFT is
-        # ~70% of this kernel (measured). A Hann window first confines a
-        # non-bin-aligned tone's energy to its main lobe (rectangular-window
-        # leakage would smear it across the padded spectrum); the lobe is 4
-        # unpadded bins wide, so the signal family is ±ceil(2·m/len) padded
-        # bins around the peak.
-        m = 1 << (len(seg) - 1).bit_length()
-        win = seg.astype(np.float64)
-        win *= _hann(len(seg))
-        power = np.abs(np.fft.rfft(win, n=m)) ** 2
-        k = int(np.argmax(power[1:]) + 1)
-        half = int(np.ceil(2.0 * m / len(seg)))
-        sig = float(np.sum(power[max(1, k - half) : k + half + 1]))
-        rest = float(np.sum(power[1:]) - sig)
-        row["snr_db_vs_sine"] = 10.0 * np.log10(sig / rest) if rest > 0 else float("inf")
-    return row
 
 
 _STATS_NAMES = [f.name for f in CLIP_STATS_SCHEMA.fields]
@@ -197,7 +157,6 @@ _STATS_ARROW_TYPES = {
     "peak": pa.float64(),
     "clip_ratio": pa.float64(),
     "zero_cross_rate": pa.float64(),
-    "snr_db_vs_sine": pa.float64(),
 }
 
 

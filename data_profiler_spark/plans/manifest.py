@@ -44,10 +44,12 @@ class Manifest:
 
     def _done(self) -> DataFrame | None:
         """The committed (status 'done') manifest rows; None before any
-        commit, so an absent table costs no Spark job."""
+        commit, so an absent table costs no Spark job, and read with the
+        declared schema, so a present one costs no schema-inference job."""
         if not self.io.exists(self.spark, self.table):
             return None
-        return self.io.read(self.spark, self.table).filter("status = 'done'")
+        done = self.io.read(self.spark, self.table, schema=MANIFEST_SCHEMA)
+        return done.filter("status = 'done'")
 
     def completed_partitions(self) -> set[int]:
         """Logical partitions a run has committed — the resume skip set."""

@@ -54,7 +54,12 @@ from data_profiler_spark.drift import drift_from_hist_rows
 from data_profiler_spark.functions.frames import local_frame
 from data_profiler_spark.plans.manifest import Manifest
 from data_profiler_spark.profiling import column_profile_collected, histograms_multi
-from data_profiler_spark.schemas import VERDICT_SCHEMA, VIOLATION_SCHEMA
+from data_profiler_spark.schemas import (
+    BASELINE_HIST_SCHEMA,
+    BASELINE_META_SCHEMA,
+    VERDICT_SCHEMA,
+    VIOLATION_SCHEMA,
+)
 from data_profiler_spark.sources.tableio import TableIO
 
 PROFILE_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
@@ -237,9 +242,7 @@ class ValidationRun:
             # meta FIRST: a crash after meta-only leaves baseline_hist
             # absent → drift is skipped entirely (the safe failure).
             meta = local_frame(
-                self.spark,
-                [(c, *spec, bid) for c, spec in specs.items()],
-                "column string, lo double, hi double, nbins int, baseline_id string",
+                self.spark, [(c, *spec, bid) for c, spec in specs.items()], BASELINE_META_SCHEMA
             )
             self.io.overwrite(meta, "baseline_meta")
             self.io.overwrite(hist.select(F.lit(bid).alias("baseline_id"), "*"), "baseline_hist")
@@ -555,10 +558,11 @@ class ValidationRun:
         which :meth:`_drift` refuses like any other id mismatch."""
         if not self.io.exists(self.spark, "baseline_hist"):
             return None
-        hist = self.io.read(self.spark, "baseline_hist").collect()
+        hist = self.io.read(self.spark, "baseline_hist", schema=BASELINE_HIST_SCHEMA)
         if not self.io.exists(self.spark, "baseline_meta"):
-            return hist, []
-        return hist, self.io.read(self.spark, "baseline_meta").collect()
+            return hist.collect(), []
+        meta = self.io.read(self.spark, "baseline_meta", schema=BASELINE_META_SCHEMA)
+        return hist.collect(), meta.collect()
 
     def _drift(self, stats: DataFrame, baseline) -> list[dict] | None:
         """PSI + binned-KS rows per baseline column vs ``baseline`` (from
@@ -572,8 +576,9 @@ class ValidationRun:
         if baseline is None:
             return None
         base_rows, meta_rows = baseline
-        hist_ids = {r["baseline_id"] for r in base_rows if "baseline_id" in r.__fields__}
-        meta_ids = {r["baseline_id"] for r in meta_rows if "baseline_id" in r.__fields__}
+        # a table written before baselines were stamped reads its ids as NULL
+        hist_ids = {r["baseline_id"] for r in base_rows} - {None}
+        meta_ids = {r["baseline_id"] for r in meta_rows} - {None}
         # both tables stamped by ONE write_baseline, or the bucket ids may
         # mean different intervals (a crash between its two writes)
         if len(hist_ids) != 1 or hist_ids != meta_ids:

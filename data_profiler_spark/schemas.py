@@ -4,7 +4,14 @@ The reference declares fixed schemas as dict constants
 (``data_profiler/helpers/constants/data_file_constants.py:36-161`` in
 /root/reference) and validates headers against them
 (``helpers/functions/data_file_functions.py:42-54``). We keep the same
-philosophy with explicit ``StructType``s.
+philosophy with explicit ``StructType``s (DDL strings for the TPC-H corpus
+tables).
+
+Every table the engine reads back — the TPC-H corpus tables
+(sources/tpch.py), the resume manifest and the drift baseline — is read with
+its schema here. ``spark.read.parquet`` without a schema runs one Spark job
+per call to infer it from the file footers before the read's own job; with
+a declared schema the read itself runs no job.
 """
 
 from __future__ import annotations
@@ -46,7 +53,6 @@ CLIP_STATS_SCHEMA = T.StructType(
         T.StructField("peak", T.DoubleType(), True),
         T.StructField("clip_ratio", T.DoubleType(), True),
         T.StructField("zero_cross_rate", T.DoubleType(), True),
-        T.StructField("snr_db_vs_sine", T.DoubleType(), True),
     ]
 )
 
@@ -115,6 +121,45 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType(), True),
     ]
 )
+
+# Drift baseline (plans/runner.py write_baseline): the histogram of each
+# baseline column and the specs it was binned with (nbins 0 for a
+# categorical). One write_baseline stamps both tables with one baseline_id.
+BASELINE_HIST_SCHEMA = T.StructType(
+    [T.StructField("baseline_id", T.StringType(), True)] + HISTOGRAM_SCHEMA.fields
+)
+BASELINE_META_SCHEMA = T.StructType(
+    [
+        T.StructField("column", T.StringType(), True),
+        T.StructField("lo", T.DoubleType(), True),
+        T.StructField("hi", T.DoubleType(), True),
+        T.StructField("nbins", T.IntegerType(), True),
+        T.StructField("baseline_id", T.StringType(), True),
+    ]
+)
+
+# ---------------------------------------------------------------------------
+# The TPC-H-ish corpus tables (TESTDATA.md), exactly as their parquet files
+# store them at every scale factor (tests/test_tableio.py holds the two equal).
+# ---------------------------------------------------------------------------
+TPCH_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+    "c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+    "p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+    "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+    "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+    "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+    "value DOUBLE, props STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
 
 # ---------------------------------------------------------------------------
 # Reference CSV file schemas (data_file_constants.py:12-161) — used by the

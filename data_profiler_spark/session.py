@@ -26,6 +26,17 @@ CLUSTER_CONFS: dict[str, str] = {
     # At 100TB the default 128MB split is right; keep explicit so it is a
     # conscious choice, not a default.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # Whole-stage codegen keeps each generated class in one LRU cache per
+    # JVM (the driver's, and each executor's on a cluster; a static conf, so
+    # read once when the JVM's SQL layer starts). Spark's default of 100
+    # entries is smaller than the engine's plan set, so every pass over the
+    # corpus recompiled what the previous pass had compiled: bench.py's 17
+    # headline entries compiled 381, 375, 375, 375, 375, 375 classes over six
+    # passes in one session. Sized from a count (CodegenMetrics, local[4]):
+    # one pass over all 53 corpus entries at sf0.01 compiles 761 classes,
+    # and with this size the next two passes compiled 18 and 9 (the headline
+    # passes 342, 6, 2, 4). 2,000 is ~2.5x the full corpus's count.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 # Session confs for tables whose rows are WIDE (the ~100KB `bytes` audio

@@ -24,11 +24,17 @@ from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class TableIO(ABC):
     @abstractmethod
-    def read(self, spark: SparkSession, table: str) -> DataFrame: ...
+    def read(
+        self, spark: SparkSession, table: str, *, schema: StructType | None = None
+    ) -> DataFrame:
+        """``schema``: the table's declared schema (schemas.py), which spares
+        a file-backed read its schema-inference job. A catalog table carries
+        its own schema and ignores it."""
 
     @abstractmethod
     def append(self, df: DataFrame, table: str) -> None: ...
@@ -64,8 +70,11 @@ class ParquetTableIO(TableIO):
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self._path(table))
+    def read(
+        self, spark: SparkSession, table: str, *, schema: StructType | None = None
+    ) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._path(table))
 
     def append(self, df: DataFrame, table: str) -> None:
         df.write.mode("append").parquet(self._path(table))
@@ -123,7 +132,9 @@ class IcebergTableIO(TableIO):
     def _ident(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:  # pragma: no cover
+    def read(
+        self, spark: SparkSession, table: str, *, schema: StructType | None = None
+    ) -> DataFrame:  # pragma: no cover
         return spark.read.format("iceberg").load(self._ident(table))
 
     def append(self, df: DataFrame, table: str) -> None:  # pragma: no cover

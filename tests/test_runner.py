@@ -384,9 +384,11 @@ def test_run_job_budget_and_phases(spark, tmp_io, count_jobs):
 
 # Spark jobs and stages of the same run against a seeded baseline: the
 # drift fold (the baseline read and one histograms_multi collect over the
-# numeric and categorical columns) on top of RUN_JOB_BUDGET's run. A budget
-# may only go down; raising it needs a CHANGES.md line saying why.
-DRIFT_RUN_JOB_STAGE_BUDGET = (22, 42)
+# numeric and categorical columns) on top of RUN_JOB_BUDGET's run. It was
+# (22, 42) while the two baseline tables were read without their declared
+# schemas (one inference job each). A budget may only go down; raising it
+# needs a CHANGES.md line saying why.
+DRIFT_RUN_JOB_STAGE_BUDGET = (20, 40)
 
 
 def test_drift_run_job_and_stage_budget(spark, tmp_io, count_jobs):

@@ -5,7 +5,11 @@ transactional table operations."""
 
 from __future__ import annotations
 
+import glob
 import os
+
+from data_profiler_spark.schemas import MANIFEST_SCHEMA
+from data_profiler_spark.sources.tpch import DEFAULT_SF_DIR, TPCH_TABLES, load_table
 
 
 def _rows(io, spark, table):
@@ -52,3 +56,37 @@ def test_writes_leave_only_table_directories(spark, tmp_io):
     entries = sorted(os.listdir(tmp_io.root))
     assert entries == ["a", "d", "o", "u"]
     assert all(os.path.isdir(os.path.join(tmp_io.root, e)) for e in entries)
+
+
+# Every TPC-H-ish table directory the engine reads: the test tables at each
+# scale factor beside DEFAULT_SF_DIR and the benchmark's copies.
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF_DIRS = sorted(
+    glob.glob(os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf*"))
+    + glob.glob(os.path.join(_REPO, "perfbench", "data", "sf*"))
+)
+
+
+def test_tpch_declared_schemas_match_files(spark):
+    assert SF_DIRS
+    for sf_dir in SF_DIRS:
+        for t in TPCH_TABLES:
+            path = os.path.join(sf_dir, f"{t}.parquet")
+            assert load_table(spark, sf_dir, t).schema == spark.read.parquet(path).schema, path
+
+
+def test_load_table_runs_no_job(spark, tmp_io):
+    """A declared-schema read plans without touching the files: no
+    schema-inference job for a corpus table, nor for a table read through
+    ParquetTableIO with its declared schema."""
+    tmp_io.append(spark.createDataFrame([(0, "s", "done", 1, "{}", 1)], MANIFEST_SCHEMA), "m")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    frames = [load_table(spark, SF_DIRS[0], t) for t in TPCH_TABLES]
+    frames.append(tmp_io.read(spark, "m", schema=MANIFEST_SCHEMA))
+    assert all(df.columns for df in frames)
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup()) == before
